@@ -77,8 +77,8 @@ object SparkEntry {
     }),
     "q03_css_count" -> ((s, dir) => {
       // native Catalyst expression — the selector count stays inside
-      // whole-stage codegen (no ScalaUDF island); UDF form remains as
-      // HtmlFunctions.cssCount for Column-API users
+      // whole-stage codegen (no ScalaUDF island); HtmlFunctions.register
+      // binds the SQL name css_count to the same expression
       graft.functions.GraftExtensions.register(s)
       pagesDf(s, dir).select(col("doc_id"),
         call_function("css_count_native", htmlStr, lit("li.item")).as("n_li"))

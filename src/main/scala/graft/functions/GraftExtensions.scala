@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point: registers the native Catalyst
   * expressions for the pure-SQL surface.
@@ -14,33 +14,40 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(GraftExtensions.htmlUnescapeDescriptor)
-    ext.injectFunction(GraftExtensions.cssCountDescriptor)
+    ext.injectFunction(GraftExtensions.cssCountDescriptor("css_count_native"))
   }
 }
 
 object GraftExtensions {
-  private[functions] val htmlUnescapeDescriptor = (
+  private type Descriptor = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  private[functions] val htmlUnescapeDescriptor: Descriptor = (
     FunctionIdentifier("html_unescape_native"),
     new ExpressionInfo(classOf[HtmlUnescape].getCanonicalName, "html_unescape_native"),
-    (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+    (children: Seq[Expression]) => {
       require(children.length == 1,
         s"html_unescape_native expects exactly 1 argument, got ${children.length}")
       HtmlUnescape(children.head)
     })
 
-  private[functions] val cssCountDescriptor = (
-    FunctionIdentifier("css_count_native"),
-    new ExpressionInfo(classOf[HtmlCssCount].getCanonicalName, "css_count_native"),
-    (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+  /** HtmlCssCount under the SQL name `name`: `css_count_native` here, and
+    * `css_count` through HtmlFunctions.register.
+    */
+  private[functions] def cssCountDescriptor(name: String): Descriptor = (
+    FunctionIdentifier(name),
+    new ExpressionInfo(classOf[HtmlCssCount].getCanonicalName, name),
+    (children: Seq[Expression]) => {
       require(children.length == 2,
-        s"css_count_native expects exactly 2 arguments, got ${children.length}")
+        s"$name expects exactly 2 arguments, got ${children.length}")
       HtmlCssCount(children.head, children(1))
     })
 
   /** Runtime registration on an already-built session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Seq(htmlUnescapeDescriptor, cssCountDescriptor).foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
+    registerOne(spark, htmlUnescapeDescriptor)
+    registerOne(spark, cssCountDescriptor("css_count_native"))
   }
+
+  private[functions] def registerOne(spark: org.apache.spark.sql.SparkSession, d: Descriptor): Unit =
+    spark.sessionState.functionRegistry.registerFunction(d._1, d._2, d._3)
 }

@@ -10,11 +10,14 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for `css_count(html, selector)` — parse the
   * document and count querySelectorAll matches without a ScalaUDF boundary,
-  * keeping the whole projection inside one WholeStageCodegen span. The
-  * per-row work (parse) dominates either way; what this buys is the codegen
-  * pipeline staying fused around it (no ScalaUDF interpreted-eval island)
-  * plus the executor-wide compiled-selector cache shared with the UDF
-  * surface.
+  * keeping the whole projection inside one WholeStageCodegen span. It is
+  * the only implementation of `css_count`: registered as `css_count_native`
+  * by GraftExtensions and as `css_count` by HtmlFunctions.register.
+  *
+  * The parse goes through HtmlFunctions.parsed, a one-entry per-thread memo,
+  * so a projection with several kernel-backed columns over the same HTML
+  * parses each row once, not once per column; the compiled-selector cache
+  * is shared with the UDF surface too.
   *
   * Column usage: register via GraftExtensions, then
   * `call_function("css_count_native", htmlCol, lit(selector))`.
@@ -32,9 +35,8 @@ case class HtmlCssCount(left: Expression, right: Expression)
       s"css_count requires (string, string), got " +
         s"(${left.dataType.sql}, ${right.dataType.sql})")
 
-  // null HTML counts 0 matches (mirrors HtmlFunctions.cssCount's kernel
-  // null branch — the default null-intercepting BinaryExpression eval would
-  // return NULL and silently disagree with the UDF surface); a null
+  // null HTML counts 0 matches (the kernel's null branch; the default
+  // null-intercepting BinaryExpression eval would return NULL); a null
   // selector stays NULL.
   override def nullable: Boolean = right.nullable
 
