@@ -5,15 +5,16 @@ package graft
   * hostile markup is a hard requirement for a crawl pipeline (one throw
   * in 10^12 docs kills a task and, un-caught, a stage). Run:
   *
-  *   python3 tools/gen_fuzz.py /tmp/fuzz_r5 1500 99
-  *   sbt -batch "runMain graft.AdversarialSweep /tmp/fuzz_r5"
+  *   python3 tools/gen_fuzz.py /tmp/fuzz 1500 99
+  *   sbt -batch "runMain graft.tools.Main adversarial /tmp/fuzz"
   *
-  * Prints per-extractor call counts and total wall; exits nonzero on ANY
+  * Prints the extractor call count and total wall; returns nonzero on ANY
   * throw, naming the file and extractor.
   */
 object AdversarialSweep {
-  def main(args: Array[String]): Unit = {
-    val dir = new java.io.File(if (args.nonEmpty) args(0) else "/tmp/fuzz_r5")
+  def run(args: Array[String]): Int = {
+    require(args.length == 1, "usage: adversarial <fuzzDir>")
+    val dir = new java.io.File(args(0))
     val files = dir.listFiles().filter(_.getName.endsWith(".html")).sortBy(_.getName)
     require(files.nonEmpty, s"no html files in $dir")
     val sels = new graft.ops.PageMeta.PageSelectors
@@ -51,6 +52,6 @@ object AdversarialSweep {
     }
     val wall = (System.nanoTime() - t0) / 1e9
     println(f"[sweep] ${files.length} docs, $calls extractor calls, $failed throws, $wall%.1f s")
-    if (failed > 0) sys.exit(1)
+    if (failed > 0) 1 else 0
   }
 }

@@ -1,32 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round helper bench (guide §1.4): times a SUBSET of the
-  * declared queries — same session config as graft.Bench — with both the
-  * frozen methodology (`.count()`) and a noop-sink run that computes every
-  * column. Does not touch Bench.scala (frozen).
+  * declared queries with both the frozen methodology (`.count()`) and a
+  * noop-sink run that computes every column. Does not touch Bench.scala
+  * (frozen).
   *
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
-  *     sbt -batch "runMain graft.BenchExtra q38 q39 q46"   // prefixes OK
+  *     sbt -batch "runMain graft.tools.Main bench-extra q38 q39 q46"   // prefixes OK
   *
   * Prints per-query per-pass seconds (count + noop) so before/after deltas
   * in OPTIMIZATION_r06.md can cite isolated computations rather than suite
   * medians.
   */
 object BenchExtra {
-  def main(args: Array[String]): Unit = {
+  def run(args: Array[String]): Int = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = tools.Main.localSession()
 
     // same steady-state warmup as Bench
     graft.pipeline.ExtractJob.run(
@@ -53,5 +43,6 @@ object BenchExtra {
         f"noop=[${noops.map(t => f"$t%.3f").mkString(",")}]")
     }
     spark.stop()
+    0
   }
 }

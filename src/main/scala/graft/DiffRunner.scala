@@ -16,7 +16,7 @@ import scala.jdk.CollectionConverters._
   * (matching ref_runner.js), so one kernel throw reports as
   * "kernel-error-only" instead of corrupting the whole output file.
   *
-  *   runMain graft.DiffRunner <inputDir> <out.json>
+  *   runMain graft.tools.Main diff <inputDir> <out.json>
   */
 object DiffRunner {
 
@@ -110,7 +110,7 @@ object DiffRunner {
   @volatile private var extraSelectors: Seq[String] = Seq.empty
   private def allSelectors: Seq[String] = selectors ++ extraSelectors
 
-  def main(args: Array[String]): Unit = {
+  def run(args: Array[String]): Int = {
     val dir = Paths.get(args(0))
     val out = args(1)
     val selFile = dir.resolve("selectors.txt")
@@ -128,5 +128,6 @@ object DiffRunner {
     }
     Files.writeString(Paths.get(out), records.mkString("[", ",", "]"))
     println(s"wrote ${records.length} records to $out")
+    0
   }
 }

@@ -21,25 +21,15 @@ object ExtractMain {
     val nBuckets = if (args.length > 2) args(2).toInt else 8
     val saltParts = if (args.length > 3) args(3).toInt else 0
     val failAtBucket = if (args.length > 4) args(4).toInt else -1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val spark = tools.Main.localSession()
     val pages = Synth.pages(spark, sfDir)
     runBuckets(spark, pages, outTable, nBuckets, saltParts, failAtBucket)
     spark.stop()
   }
 
-  /** The bucketed-commit loop shared by [[ExtractMain]] and
-    * [[SoakMain]]: pending-bucket discovery (resume-aware), per-bucket
-    * extraction + atomic commit + lineage metrics + snapshot append, then
+  /** The bucketed-commit loop shared by [[ExtractMain]] and [[SoakMain]]
+    * (`graft.tools.Main soak`): pending-bucket discovery (resume-aware),
+    * per-bucket extraction + atomic commit + lineage metrics + snapshot append, then
     * the end-of-run totals. `failAtBucket` injects a crash BEFORE that
     * bucket's commit to drive the resume path.
     */

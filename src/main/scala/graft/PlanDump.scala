@@ -1,27 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` for the named queries (prefix match) to a
   * directory — the plan evidence the optimization round commits under
   * plans/r06/.
   *
-  *   sbt -batch "runMain graft.PlanDump plans/r06 before q38 q39"
+  *   sbt -batch "runMain graft.tools.Main plandump plans/r06 before q38 q39"
   * writes plans/r06/q38_neardup_clusters_before.txt etc.
   */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: PlanDump <outDir> <suffix> [queryPrefix...]")
+  def run(args: Array[String]): Int = {
+    require(args.length >= 2, "usage: plandump <outDir> <suffix> [queryPrefix...]")
     val outDir = args(0)
     val suffix = args(1)
     val prefixes = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = tools.Main.localSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val wanted = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => prefixes.isEmpty || prefixes.exists(n.startsWith))
@@ -35,5 +28,6 @@ object PlanDump {
       println(s"wrote $outDir/${name}_$suffix.txt (${plan.length} chars)")
     }
     spark.stop()
+    0
   }
 }

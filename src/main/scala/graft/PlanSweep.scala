@@ -1,14 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Whole-suite physical-plan audit AND regression gate: flags
   * cartesian/nested-loop joins, counts exchanges + non-codegen UDF operators
-  * per query, and FAILS (nonzero exit) when any query's final plan exceeds
+  * per query, and FAILS (nonzero status) when any query's final plan exceeds
   * the exchange budget or plans a non-whitelisted nested-loop join — so
   * lineage growth (the round-2 q38 defect: 4,088 Exchange nodes from an
   * uncheckpointed iterative loop) can never silently return. Run after any
   * query change:
-  *   sbt -batch "runMain graft.PlanSweep [sfDir]"
+  *   sbt -batch "runMain graft.tools.Main plansweep [sfDir]"
   *
   * Known, deliberate exception: q17_embed_topk is the EXACT brute-force ANN
   * baseline — a crossJoin against a broadcast 8-row query side plans as
@@ -28,12 +27,9 @@ object PlanSweep {
   /** Queries whose nested-loop join is deliberate (documented above). */
   val BnljWhitelist: Set[String] = Set("q17_embed_topk")
 
-  def main(args: Array[String]): Unit = {
+  def run(args: Array[String]): Int = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false).appName("plansweep").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = tools.Main.localSession()
     val bad = Seq("CartesianProduct", "BroadcastNestedLoop")
     var violations = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
@@ -51,8 +47,10 @@ object PlanSweep {
     spark.stop()
     if (violations > 0) {
       System.err.println(s"[plansweep] FAIL: $violations quer${if (violations == 1) "y" else "ies"} violated the plan budget")
-      sys.exit(1)
+      1
+    } else {
+      println("[plansweep] PASS: all plans within budget")
+      0
     }
-    println("[plansweep] PASS: all plans within budget")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Two-cluster-size scaling evidence (BASELINE.json north_rule): the sandbox
@@ -20,24 +20,18 @@ import org.apache.spark.sql.functions._
   *     per-doc kernel work dominates per-row plumbing, as it does on real
   *     crawl data.
   *
-  *   runMain graft.ScalingBench [N] [replicate] [trials] [sfDir]
+  *   runMain graft.tools.Main scaling [N] [replicate] [trials] [sfDir]
   */
 object ScalingBench {
 
-  def main(args: Array[String]): Unit = {
+  def run(args: Array[String]): Int = {
     val n = if (args.length > 0) args(0).toInt else 4
     val replicate = if (args.length > 1) args(1).toInt else 20
     val trials = if (args.length > 2) args(2).toInt else 5
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
 
-    val spark = SparkSession.builder()
-      .master(s"local[${4 * n}]")
-      .config("spark.sql.shuffle.partitions", (4 * n).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false") // keep partition counts exact
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = tools.Main.localSession(4 * n)
+    spark.conf.set("spark.sql.adaptive.enabled", "false") // keep partition counts exact
 
     val filler = concat(lit("<div class=\"sec\"><h2>section</h2><p>"),
       col("text"), lit("</p><ul><li>a</li><li>b</li></ul></div>"))
@@ -84,5 +78,6 @@ object ScalingBench {
     println(
       f"""{"metric":"scaling","n_cores":$n,"docs":$docs,"thr_N_best":$thrNb%.1f,"thr_4N_best":$thr4b%.1f,"thr_N_median":$thrNm%.1f,"thr_4N_median":$thr4m%.1f,"efficiency_best":${thr4b / (4 * thrNb)}%.3f,"efficiency_median":${thr4m / (4 * thrNm)}%.3f,"efficiency_pair_median":$effPairMed%.3f,"efficiency_pair_max":$effPairMax%.3f}""")
     spark.stop()
+    0
   }
 }

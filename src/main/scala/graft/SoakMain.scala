@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.pipeline.Synth
 
@@ -13,25 +12,16 @@ import graft.pipeline.Synth
   * plus JVM peak heap so wall-time linearity and memory stability are
   * recorded numbers, not claims.
   *
-  *   runMain graft.SoakMain <sfDir> <outTable> <nBuckets> <replication> [failAtBucket]
+  *   runMain graft.tools.Main soak <sfDir> <outTable> <nBuckets> <replication> [failAtBucket]
   */
 object SoakMain {
-  def main(args: Array[String]): Unit = {
+  def run(args: Array[String]): Int = {
     val sfDir = args(0)
     val outTable = args(1)
     val nBuckets = args(2).toInt
     val rep = args(3).toInt
     val failAtBucket = if (args.length > 4) args(4).toInt else -1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = tools.Main.localSession()
 
     // the replica offset assumes max(doc_id) < 10^7 — a bigger sfDir would
     // silently mint colliding doc_ids/urls and void the zero-duplicate
@@ -58,5 +48,6 @@ object SoakMain {
       .map(_.getPeakUsage.getUsed).sum
     println(f"[soak] replication=$rep wall=$wall%.1f s peak_heap=${peakHeap / 1e9}%.2f GB")
     spark.stop()
+    0
   }
 }

@@ -3,13 +3,13 @@ package graft.kernel
 /** Tiny CLI surface over the kernel for manual verification and single-node
   * throughput checks:
   *
-  *   runMain graft.kernel.KernelCli parse <file> [selector]
-  *   runMain graft.kernel.KernelCli bench <file> <iterations>
-  *   runMain graft.kernel.KernelCli text  <file>
-  *   runMain graft.kernel.KernelCli main  <file>   # boilerplate-stripped
+  *   runMain graft.tools.Main kernel parse <file> [selector]
+  *   runMain graft.tools.Main kernel bench <file> <iterations>
+  *   runMain graft.tools.Main kernel text  <file>
+  *   runMain graft.tools.Main kernel main  <file>   # boilerplate-stripped
   */
 object KernelCli {
-  def main(args: Array[String]): Unit = {
+  def run(args: Array[String]): Int = {
     val html = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(args(1))),
       java.nio.charset.StandardCharsets.UTF_8)
@@ -48,5 +48,6 @@ object KernelCli {
         println(f"parsed $iters%d docs of ${html.length}%d chars in $sec%.3f s = ${iters / sec}%.1f docs/sec/core")
       case other => sys.error(s"unknown op $other")
     }
+    0
   }
 }

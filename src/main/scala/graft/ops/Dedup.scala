@@ -127,15 +127,22 @@ object Dedup {
         s"${row.getLong(1)} distinct doc_ids")
   }
 
-  /** Connected components over near-dup candidate pairs — the step that
-    * actually deduplicates a corpus (each cluster keeps one canonical doc).
-    * Pregel-style min-label propagation: every node's label converges to the
-    * smallest doc_id reachable through candidate edges; rounds = component
-    * diameter (near-dup clusters are dense, so typically 2–4). Each round is
-    * one equi-join + one partial-aggregated groupBy — shuffle-on-key, no
-    * driver-side graph. `ids` must contain every doc (singletons cluster as
-    * themselves); pair endpoints missing from `ids` still propagate labels
-    * but emit no output row of their own.
+  /** Connected components over a bipartite doc↔bucket membership table —
+    * the step that actually deduplicates a corpus (each cluster keeps one
+    * canonical doc), and the scale-correct formulation for LSH clustering:
+    * a bucket of k docs contributes k membership edges instead of k(k-1)/2
+    * candidate pairs, so the edge table stays LINEAR in the corpus no matter
+    * how dense the near-dup structure is. Components are identical to the
+    * pairwise formulation (a bucket's docs form a clique either way), and a
+    * candidate pair is just a bucket with two members.
+    *
+    * Pregel-style min-label propagation: every doc's label converges to the
+    * smallest doc_id reachable through shared buckets. One round =
+    * doc→bucket min + bucket→doc min (exactly one pair-graph hop, each min
+    * an equi-join + partial-aggregated groupBy — shuffle-on-key, no
+    * driver-side graph) + pointer jump. `ids` must contain every doc
+    * (singletons cluster as themselves); members missing from `ids` still
+    * propagate labels but emit no output row of their own.
     *
     * Each round's labels are `localCheckpoint`ed, not merely cached: the
     * checkpoint truncates the LOGICAL plan to a scan of the materialized
@@ -148,70 +155,17 @@ object Dedup {
     * localCheckpoint for reliable `checkpoint()` into the table dir — same
     * plan shape, executor-loss-proof.
     */
-  def clustersFromPairs(ids: DataFrame, pairs: DataFrame,
-      maxIter: Int = 50, validateIds: Boolean = true): DataFrame = {
-    if (validateIds) requireDistinctIds(ids)
-    val edges = pairs.select(col("id1").as("src"), col("id2").as("dst"))
-      .union(pairs.select(col("id2").as("src"), col("id1").as("dst")))
-      .cache()
-    // lazy localCheckpoint: the labelSum action below materializes it
-    var labels = ids.select(col("doc_id").as("id"))
-      .withColumn("label", col("id")).localCheckpoint(false)
-    // labels are monotonically non-increasing per node, so the global sum
-    // strictly decreases iff ANY label changed — convergence costs ONE agg
-    // action per round instead of a per-row comparison join
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("label").cast("decimal(38,0)"))).head
-        .getDecimal(0)
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // hop: take the minimum label among direct neighbors
-      val nbrMin = edges.join(labels, col("src") === col("id"))
-        .groupBy(col("dst")).agg(min("label").as("nmin"))
-      val hopped = labels.join(nbrMin, col("id") === col("dst"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-      // pointer jump: label(id) <- label(label(id)). A label is always a
-      // doc id in the same component whose own label can only be smaller,
-      // so the jump is valid and halves remaining path lengths — rounds
-      // become O(log diameter) instead of O(diameter) on chain-shaped
-      // candidate graphs (measured 50+ -> ~7 rounds on sf0.1)
-      val byId = hopped.select(col("id").as("jid"), col("label").as("jlabel"))
-      val next = hopped.join(byId, hopped("label") === byId("jid"), "left")
-        .select(hopped("id"),
-          coalesce(col("jlabel"), hopped("label")).as("label"))
-        .localCheckpoint(false)
-      val s = labelSum(next) // materializes the checkpoint
-      labels = next
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      iter += 1
-    }
-    edges.unpersist()
-    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-  }
-
-  /** Connected components over a bipartite doc↔bucket membership table —
-    * the scale-correct formulation for LSH clustering: a bucket of k docs
-    * contributes k membership edges instead of k(k-1)/2 candidate pairs, so
-    * the edge table stays LINEAR in the corpus no matter how dense the
-    * near-dup structure is. Components are identical to the pairwise
-    * formulation (a bucket's docs form a clique either way). One round =
-    * doc→bucket min + bucket→doc min (exactly one pair-graph hop) + pointer
-    * jump.
-    *
-    * Lineage is truncated per round with `localCheckpoint` — see
-    * [[clustersFromPairs]] for why (constant plan depth, bounded recompute).
-    */
   def clustersFromMemberships(ids: DataFrame, memberships: DataFrame,
       maxIter: Int = 50, validateIds: Boolean = true): DataFrame = {
     if (validateIds) requireDistinctIds(ids)
     val member = memberships.select(col("doc_id").as("mid"), col("bucket_key"))
       .cache()
+    // lazy localCheckpoint: the labelSum action below materializes it
     var labels = ids.select(col("doc_id").as("id"))
       .withColumn("label", col("id")).localCheckpoint(false)
+    // labels are monotonically non-increasing per doc, so the global sum
+    // strictly decreases iff ANY label changed — convergence costs ONE agg
+    // action per round instead of a per-row comparison join
     def labelSum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("label").cast("decimal(38,0)"))).head.getDecimal(0)
     var prevSum = labelSum(labels)
@@ -225,6 +179,11 @@ object Dedup {
       val hopped = labels.join(docMin, col("id") === col("mid"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
+      // pointer jump: label(id) <- label(label(id)). A label is always a
+      // doc id in the same component whose own label can only be smaller,
+      // so the jump is valid and halves remaining path lengths — rounds
+      // become O(log diameter) instead of O(diameter) on chain-shaped
+      // candidate graphs (measured 50+ -> ~7 rounds on sf0.1)
       val byId = hopped.select(col("id").as("jid"), col("label").as("jlabel"))
       val next = hopped.join(byId, hopped("label") === byId("jid"), "left")
         .select(hopped("id"),

@@ -12,8 +12,8 @@ import graft.kernel.{HtmlParser, Query}
   *     generation all read this table, not the HTML)
   *   - [[outlinks]]: the link-graph edge list (href, anchor text, nofollow)
   *     — the input to in/out-degree metrics, host-level graphs, and
-  *     connected components (Dedup.clustersFromPairs is generic over any
-  *     edge table, including this one)
+  *     connected components (Dedup.clustersFromMemberships takes any edge
+  *     table, this one included, with each edge as a two-member bucket)
   *
   * Both are one kernel parse per page inside the same mapPartitions shape
   * as ExtractJob (map-only, no shuffle); selectors compile once per

@@ -250,12 +250,17 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!cands.contains((0L, 2L)) && !cands.contains((1L, 2L)))
   }
 
+  /** Candidate pairs as memberships: each pair is a bucket of two docs. */
+  private def pairBuckets(pairs: DataFrame): DataFrame =
+    pairs.select(explode(array(col("id1"), col("id2"))).as("doc_id"),
+      struct(col("id1"), col("id2")).as("bucket_key"))
+
   test("near-dup clustering: min-label components over candidate pairs") {
     import spark.implicits._
     // components {1,2,3} (chain), {7,9}, singleton 5
     val ids = Seq(1L, 2L, 3L, 5L, 7L, 9L).toDF("doc_id")
     val pairs = Seq((2L, 3L), (1L, 2L), (7L, 9L)).toDF("id1", "id2")
-    val got = graft.ops.Dedup.clustersFromPairs(ids, pairs)
+    val got = graft.ops.Dedup.clustersFromMemberships(ids, pairBuckets(pairs))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 7L -> 7L, 9L -> 7L))
     // end-to-end: identical texts cluster together under the full pipeline
@@ -541,7 +546,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dupIds = Seq(1L, 1L, 2L).toDF("doc_id")
     val pairs = Seq((1L, 2L)).toDF("id1", "id2")
     intercept[IllegalArgumentException] {
-      graft.ops.Dedup.clustersFromPairs(dupIds, pairs)
+      graft.ops.Dedup.clustersFromMemberships(dupIds, pairBuckets(pairs))
     }
     intercept[IllegalArgumentException] {
       graft.ops.Dedup.clustersFromMemberships(dupIds,

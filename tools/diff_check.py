@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Compare reference-engine records (ref_runner.js) with kernel records
-(graft.DiffRunner). Usage: diff_check.py <ref.json> <kernel.json>
+(`graft.tools.Main diff`, graft.DiffRunner). Usage: diff_check.py <ref.json> <kernel.json>
 """
 import json, sys
 from collections import Counter

@@ -11,5 +11,5 @@ python3 tools/transpile_reference.py /tmp/ref_js
 rm -rf /tmp/graft_fuzz
 python3 tools/gen_fuzz.py /tmp/graft_fuzz "$N" "$SEED"
 node tools/ref_runner.js /tmp/graft_fuzz /tmp/graft_ref.json
-sbt -batch "runMain graft.DiffRunner /tmp/graft_fuzz /tmp/graft_ker.json" | grep wrote
+sbt -batch "runMain graft.tools.Main diff /tmp/graft_fuzz /tmp/graft_ker.json" | grep wrote
 python3 tools/diff_check.py /tmp/graft_ref.json /tmp/graft_ker.json
