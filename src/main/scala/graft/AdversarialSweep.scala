@@ -17,7 +17,6 @@ object AdversarialSweep {
     val dir = new java.io.File(args(0))
     val files = dir.listFiles().filter(_.getName.endsWith(".html")).sortBy(_.getName)
     require(files.nonEmpty, s"no html files in $dir")
-    val sels = new graft.ops.PageMeta.PageSelectors
     var calls = 0L
     val t0 = System.nanoTime()
     var failed = 0
@@ -32,21 +31,21 @@ object AdversarialSweep {
         }
       }
       val root = graft.kernel.HtmlParser.parse(html)
-      drive("headMetaOf")(graft.ops.PageMeta.headMetaOf(0L, root, sels))
-      drive("outlinksOf")(graft.ops.PageMeta.outlinksOf(0L, root, sels))
-      drive("tableRowsOf")(graft.ops.PageMeta.tableRowsOf(0L, root, sels))
-      drive("alternatesOf")(graft.ops.PageMeta.alternatesOf(0L, root, sels))
-      drive("metaRefreshOf")(graft.ops.PageMeta.metaRefreshOf(0L, root, sels))
+      drive("headMetaOf")(graft.ops.PageMeta.headMetaOf(0L, root))
+      drive("outlinksOf")(graft.ops.PageMeta.outlinksOf(0L, root))
+      drive("tableRowsOf")(graft.ops.PageMeta.tableRowsOf(0L, root))
+      drive("alternatesOf")(graft.ops.PageMeta.alternatesOf(0L, root))
+      drive("metaRefreshOf")(graft.ops.PageMeta.metaRefreshOf(0L, root))
       drive("outlineOf")(graft.ops.PageMeta.outlineOf(0L, root))
       drive("templateFpOf")(graft.ops.PageMeta.templateFpOf(root))
       drive("mainContent")(graft.kernel.Boilerplate.mainContent(html))
       drive("feedEntries")(graft.sources.Feed.entries(html))
       drive("sitemapEntries")(graft.sources.Sitemap.entries(html))
       // round-5 extractors
-      drive("pageBaseOf")(graft.ops.PageMeta.pageBaseOf(root, sels))
-      drive("imagesOf")(graft.ops.PageMeta.imagesOf(0L, root, sels))
-      drive("socialMetaOf")(graft.ops.PageMeta.socialMetaOf(0L, root, sels))
-      drive("captionsOf")(graft.ops.PageMeta.captionsOf(0L, root, sels))
+      drive("pageBaseOf")(graft.ops.PageMeta.pageBaseOf(root))
+      drive("imagesOf")(graft.ops.PageMeta.imagesOf(0L, root))
+      drive("socialMetaOf")(graft.ops.PageMeta.socialMetaOf(0L, root))
+      drive("captionsOf")(graft.ops.PageMeta.captionsOf(0L, root))
       drive("mediaSourcesOf")(graft.ops.PageMeta.mediaSourcesOf(0L, root))
       drive("parseSrcset")(graft.ops.PageMeta.parseSrcset(html.take(4096)))
     }

@@ -1409,7 +1409,7 @@ object SparkEntry {
       val qname = "q92_sessions_" +
         java.util.UUID.randomUUID().toString.replace("-", "")
       val stream = graft.streaming.ExtractStream.hostSessions(
-        graft.streaming.ExtractStream.run(input.toDF()), gapMs = 600000L)
+        graft.pipeline.ExtractJob.run(input.toDF()), gapMs = 600000L)
         .toDF()
         .writeStream.format("memory").queryName(qname)
         .outputMode("append").start()

@@ -13,7 +13,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.htmlUnescapeDescriptor)
+    ext.injectFunction(GraftExtensions.htmlUnescapeDescriptor("html_unescape_native"))
     ext.injectFunction(GraftExtensions.cssCountDescriptor("css_count_native"))
   }
 }
@@ -21,12 +21,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
   private type Descriptor = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  private[functions] val htmlUnescapeDescriptor: Descriptor = (
-    FunctionIdentifier("html_unescape_native"),
-    new ExpressionInfo(classOf[HtmlUnescape].getCanonicalName, "html_unescape_native"),
+  /** HtmlUnescape under the SQL name `name`: `html_unescape_native` here,
+    * and `html_unescape` through HtmlFunctions.register.
+    */
+  private[functions] def htmlUnescapeDescriptor(name: String): Descriptor = (
+    FunctionIdentifier(name),
+    new ExpressionInfo(classOf[HtmlUnescape].getCanonicalName, name),
     (children: Seq[Expression]) => {
       require(children.length == 1,
-        s"html_unescape_native expects exactly 1 argument, got ${children.length}")
+        s"$name expects exactly 1 argument, got ${children.length}")
       HtmlUnescape(children.head)
     })
 
@@ -44,7 +47,7 @@ object GraftExtensions {
 
   /** Runtime registration on an already-built session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    registerOne(spark, htmlUnescapeDescriptor)
+    registerOne(spark, htmlUnescapeDescriptor("html_unescape_native"))
     registerOne(spark, cssCountDescriptor("css_count_native"))
   }
 

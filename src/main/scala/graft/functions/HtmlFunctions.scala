@@ -11,9 +11,9 @@ import graft.kernel._
   * each column of a projection on its own, so without `parsed` a row with
   * several kernel-backed columns over the same HTML would be parsed once
   * per column, which costs far more than the row codec. `css_count` is the
-  * native expression HtmlCssCount, which parses through `parsed` too. Scalar
-  * string ops that CAN stay inside codegen (entity decode) also exist as a
-  * native Catalyst expression — see graft.functions.HtmlUnescape.
+  * native expression HtmlCssCount, which parses through `parsed` too, and
+  * `html_unescape` is the native expression HtmlUnescape, which stays
+  * inside codegen.
   *
   * Selectors are compiled once per executor (cache keyed by selector string)
   * — the analog of the reference compiling a Matcher once per query
@@ -121,10 +121,6 @@ object HtmlFunctions extends Serializable {
     }
   }
 
-  val htmlUnescapeUdf = udf { (s: String) =>
-    if (s == null) null else Entities.decode(s)
-  }
-
   /** Boilerplate-stripped main-content extraction (kernel heuristics —
     * graft.kernel.Boilerplate): one parse per row, returns
     * struct(main_text, n_stripped).
@@ -141,7 +137,7 @@ object HtmlFunctions extends Serializable {
     GraftExtensions.registerOne(spark, GraftExtensions.cssCountDescriptor("css_count"))
     spark.udf.register("css_first_text", cssFirstText)
     spark.udf.register("css_first_attr", cssFirstAttr)
-    spark.udf.register("html_unescape", htmlUnescapeUdf)
+    GraftExtensions.registerOne(spark, GraftExtensions.htmlUnescapeDescriptor("html_unescape"))
     spark.udf.register("main_content", mainContent)
   }
 }

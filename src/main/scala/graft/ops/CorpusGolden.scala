@@ -4,9 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.kernel.HtmlParser
 import java.nio.file.{Files, Paths}
 
-/** Parse the reference's real-world corpus through the full Spark path and
-  * emit per-file structural fingerprints. No SQL oracle exists (DuckDB can't
-  * parse HTML); determinism of these values is pinned by ScalaTest.
+/** Parse a directory of HTML pages through the full Spark path and emit
+  * per-file structural fingerprints. No SQL oracle exists (DuckDB can't
+  * parse HTML); determinism of these values is pinned by ScalaTest. The
+  * default directory is the repository's hand-written fixture pages,
+  * relative to the working directory (run from the repository root).
   */
 object CorpusGolden {
 
@@ -20,7 +22,7 @@ object CorpusGolden {
   }
 
   def run(spark: SparkSession,
-      corpusDir: String = "/root/reference/test/html"): DataFrame = {
+      corpusDir: String = "src/test/resources/pages"): DataFrame = {
     import spark.implicits._
     // binaryFile source: file bytes travel as data partitions (one file per
     // row, scanned executor-side) — NOT in the task closure, which shipped

@@ -1,8 +1,9 @@
 package graft.ops
 
+import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.kernel.{HtmlParser, Query}
+import graft.kernel.{Element, HtmlParser, ParseOptions, Query}
 
 /** Page-level metadata extraction — the two tables every crawl pipeline
   * builds next to the text corpus:
@@ -15,11 +16,11 @@ import graft.kernel.{HtmlParser, Query}
   *     connected components (Dedup.clustersFromMemberships takes any edge
   *     table, this one included, with each edge as a two-member bucket)
   *
-  * Both are one kernel parse per page inside the same mapPartitions shape
-  * as ExtractJob (map-only, no shuffle); selectors compile once per
-  * partition, the reference-compile-once-per-query pattern
-  * (/root/reference/src/index.ts:408). Degree metrics are plain relational
-  * aggregations over the edge table.
+  * Every Dataset extractor is a pure per-page function (`*Of`) lifted by
+  * the private `perPage`: one kernel parse per page, map-only like
+  * ExtractJob. Selectors compile once per JVM, the reference's
+  * compile-once-per-query pattern (reference src/index.ts:408). Degree
+  * metrics are plain relational aggregations over the edge table.
   */
 object PageMeta {
 
@@ -36,26 +37,37 @@ object PageMeta {
       anchor: String,
       nofollow: Boolean)
 
-  private def parseBytes(html: Array[Byte]) =
-    HtmlParser.parse(new String(html, java.nio.charset.StandardCharsets.UTF_8))
+  // One set of compiled selectors for every task thread: a compiled union
+  // is an immutable SelectorPart array and Query keeps its search state per
+  // call (HtmlFunctions.compiled shares its cache the same way).
+  private val TitleSel = Query.compileUnion("title")
+  private val DescSel = Query.compileUnion("meta[name=\"description\"]")
+  private val CanonSel = Query.compileUnion("link[rel=\"canonical\"]")
+  private val RobotsSel = Query.compileUnion("meta[name=\"robots\"]")
+  private val AnchorSel = Query.compileUnion("a")
+  private val TableSel = Query.compileUnion("table")
+  private val AlternateSel = Query.compileUnion("link[rel=\"alternate\"]")
+  private val MetaSel = Query.compileUnion("meta")
+  private val BaseSel = Query.compileUnion("base")
+  private val ImgSel = Query.compileUnion("img")
+  private val JsonLdSel = Query.compileUnion("script[type=\"application/ld+json\"]")
 
-  /** Compiled-selector bundle for the per-page extractors — build ONE per
-    * partition (or per test thread): selector compilation is the
-    * compile-once-per-query pattern, not per-row work.
+  /** The Dataset lift of a per-page function: select (doc_id, html), decode
+    * UTF-8, parse each page once with `opts` and flat-map `f` over it, in
+    * one typed partition map (no shuffle). perfbench counts kernel calls by
+    * this closure's owner class, so the lift stays inside PageMeta.
     */
-  final class PageSelectors {
-    private[ops] val title = Query.compileUnion("title")
-    private[ops] val desc = Query.compileUnion("meta[name=\"description\"]")
-    private[ops] val canon = Query.compileUnion("link[rel=\"canonical\"]")
-    private[ops] val robots = Query.compileUnion("meta[name=\"robots\"]")
-    private[ops] val a = Query.compileUnion("a")
-    private[ops] val table = Query.compileUnion("table")
-    private[ops] val alternate = Query.compileUnion("link[rel=\"alternate\"]")
-    private[ops] val meta = Query.compileUnion("meta")
-    private[ops] val base = Query.compileUnion("base")
-    private[ops] val img = Query.compileUnion("img")
-    private[ops] val figure = Query.compileUnion("figure")
-    private[ops] val figcaption = Query.compileUnion("figcaption")
+  private def perPage[T <: Product : TypeTag](pages: DataFrame,
+      opts: ParseOptions = ParseOptions())(
+      f: (Long, Element) => IterableOnce[T]): Dataset[T] = {
+    val spark = pages.sparkSession
+    import spark.implicits._
+    pages.select(col("doc_id").cast("long"), col("html"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions(_.flatMap { case (id, html) =>
+        f(id, HtmlParser.parse(
+          new String(html, java.nio.charset.StandardCharsets.UTF_8), opts))
+      })
   }
 
   /** Document BASE declaration (`<base href=...>`): the first `base`
@@ -73,22 +85,21 @@ object PageMeta {
     * element (HtmlParser tag table — reference src/index.ts:36); this is
     * the extraction half.
     */
-  def pageBaseOf(root: graft.kernel.Element, s: PageSelectors): String =
-    Query.querySelectorAll(root, s.base).iterator
+  def pageBaseOf(root: Element): String =
+    Query.querySelectorAll(root, BaseSel).iterator
       .flatMap(_.getAttribute("href"))
       .take(1).toSeq.headOption.getOrElse("")
 
   /** Per-page head-metadata extraction (pure kernel function — the exact
     * logic [[headMeta]] runs per row; corpus goldens pin it on real pages).
     */
-  def headMetaOf(id: Long, root: graft.kernel.Element,
-      s: PageSelectors): HeadMeta = {
-    val title = Query.querySelector(root, s.title).map(_.text).getOrElse("")
-    val desc = Query.querySelector(root, s.desc)
+  def headMetaOf(id: Long, root: Element): HeadMeta = {
+    val title = Query.querySelector(root, TitleSel).map(_.text).getOrElse("")
+    val desc = Query.querySelector(root, DescSel)
       .flatMap(_.getAttribute("content")).getOrElse("")
-    val canon = Query.querySelector(root, s.canon)
+    val canon = Query.querySelector(root, CanonSel)
       .flatMap(_.getAttribute("href")).getOrElse("")
-    val noindex = Query.querySelector(root, s.robots)
+    val noindex = Query.querySelector(root, RobotsSel)
       .flatMap(_.getAttribute("content"))
       .exists(_.toLowerCase(java.util.Locale.ROOT).split("[,\\s]+")
         .contains("noindex"))
@@ -96,27 +107,16 @@ object PageMeta {
   }
 
   /** (doc_id, html) or a full pages frame → one HeadMeta row per page. */
-  def headMeta(pages: DataFrame): Dataset[HeadMeta] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sels = new PageSelectors
-        it.map { case (id, html) => headMetaOf(id, parseBytes(html), sels) }
-      }
-  }
+  def headMeta(pages: DataFrame): Dataset[HeadMeta] =
+    perPage(pages)((id, root) => Iterator.single(headMetaOf(id, root)))
 
-  /** (doc_id, html) → link-graph edges in document order. `href`-less
+  /** Per-page link-graph edges in document order (the function
+    * [[outlinks]] lifts; corpus goldens pin it on real pages). `href`-less
     * anchors are skipped (they are fragment targets, not edges); `nofollow`
     * follows the whitespace/comma-token reading of rel.
     */
-  /** Per-page edge extraction (pure kernel function shared with
-    * [[outlinks]]; corpus goldens pin it on real pages).
-    */
-  def outlinksOf(id: Long, root: graft.kernel.Element,
-      s: PageSelectors): Seq[Outlink] =
-    Query.querySelectorAll(root, s.a).iterator.flatMap { a =>
+  def outlinksOf(id: Long, root: Element): Seq[Outlink] =
+    Query.querySelectorAll(root, AnchorSel).iterator.flatMap { a =>
       a.getAttribute("href").map { href =>
         val nofollow = a.getAttribute("rel")
           .exists(_.toLowerCase(java.util.Locale.ROOT).split("[,\\s]+")
@@ -125,18 +125,7 @@ object PageMeta {
       }
     }.toSeq
 
-  def outlinks(pages: DataFrame): Dataset[Outlink] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sels = new PageSelectors
-        it.flatMap { case (id, html) =>
-          outlinksOf(id, parseBytes(html), sels)
-        }
-      }
-  }
+  def outlinks(pages: DataFrame): Dataset[Outlink] = perPage(pages)(outlinksOf)
 
   /** [[outlinks]] plus the page's `<base href>` declaration riding every
     * edge row as `page_base` ("" when the page declares none) — ONE kernel
@@ -145,54 +134,34 @@ object PageMeta {
     * href against `UrlOps.documentBase(page_url, page_base)`, not the page
     * url alone (q78/q81 compose it that way).
     */
-  def outlinksWithBase(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sels = new PageSelectors
-        it.flatMap { case (id, html) =>
-          val root = parseBytes(html)
-          val base = pageBaseOf(root, sels)
-          outlinksOf(id, root, sels).map(o =>
-            (o.doc_id, o.href, o.anchor, o.nofollow, base))
-        }
-      }
-      .toDF("doc_id", "href", "anchor", "nofollow", "page_base")
-  }
+  def outlinksWithBase(pages: DataFrame): DataFrame =
+    perPage(pages) { (id, root) =>
+      val base = pageBaseOf(root)
+      outlinksOf(id, root).map(o => (o.doc_id, o.href, o.anchor, o.nofollow, base))
+    }.toDF("doc_id", "href", "anchor", "nofollow", "page_base")
 
   /** Structured-data (JSON-LD) extraction: the schema.org payloads sites
     * embed in `<script type="application/ld+json">` blocks — the highest-
     * precision metadata a crawl carries (article headlines, authors,
     * dates), extracted by every serious web pipeline. One kernel parse per
-    * page, selector compiled once per partition; the script body comes via
+    * page with script bodies kept; the script body comes via
     * `rawText` (the raw-text fast path — reference src/index.ts:879–884 —
     * keeps it verbatim, with NO entity decode: decoding would corrupt JSON
     * containing `&`). Blocks emit in document order with their index, one
     * row per block; downstream JSON field access is left to Spark's
     * codegen'd `get_json_object`/`from_json`, not the kernel.
     */
-  def jsonLd(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sel = Query.compileUnion("script[type=\"application/ld+json\"]")
-        // script=true: the reference's default drops script BODIES
-        // (reference src/index.ts:16, 936–959); JSON-LD lives in them
-        val opts = graft.kernel.ParseOptions(script = true)
-        it.flatMap { case (id, html) =>
-          val root = HtmlParser.parse(
-            new String(html, java.nio.charset.StandardCharsets.UTF_8), opts)
-          Query.querySelectorAll(root, sel).iterator.zipWithIndex.map {
-            case (s, i) => (id, i, s.rawText)
-          }
-        }
-      }
+  def jsonLdOf(id: Long, root: Element): Seq[(Long, Int, String)] =
+    Query.querySelectorAll(root, JsonLdSel).iterator.zipWithIndex.map {
+      case (s, i) => (id, i, s.rawText)
+    }.toSeq
+
+  /** script=true: the reference's default drops script BODIES (reference
+    * src/index.ts:16, 936–959), and JSON-LD lives in them.
+    */
+  def jsonLd(pages: DataFrame): DataFrame =
+    perPage(pages, ParseOptions(script = true))(jsonLdOf)
       .toDF("doc_id", "block_idx", "json")
-  }
 
   /** HTML TABLE extraction — tables are the web's structured-data modality
     * (stats, specs, leaderboards); curation pipelines lift them out of the
@@ -201,23 +170,18 @@ object PageMeta {
     * with cells = entity-decoded td/th texts joined by '|' in document
     * order; indexes are document-ordered. Direct-child cells only (nested
     * tables contribute their own rows, not their ancestors'). Same
-    * map-only kernel shape as the other extractors.
+    * map-only kernel shape as the other extractors; corpus goldens pin
+    * the per-page function on real pages.
     */
-  /** Per-page table-row extraction (pure kernel function shared with
-    * [[tables]]; corpus goldens pin it on real pages). Rows:
-    * (doc_id, table_idx, row_idx, is_header, cells-joined-by-|).
-    */
-  def tableRowsOf(id: Long, root: graft.kernel.Element,
-      s: PageSelectors): Seq[(Long, Int, Int, Boolean, String)] =
-    Query.querySelectorAll(root, s.table).iterator.zipWithIndex.flatMap {
+  def tableRowsOf(id: Long, root: Element): Seq[(Long, Int, Int, Boolean, String)] =
+    Query.querySelectorAll(root, TableSel).iterator.zipWithIndex.flatMap {
       case (t, ti) =>
         val trs = t.childNodes.iterator.collect {
-          case e: graft.kernel.Element
-            if e.tagName.equalsIgnoreCase("tr") => e
+          case e: Element if e.tagName.equalsIgnoreCase("tr") => e
         }.toSeq
         trs.iterator.zipWithIndex.map { case (tr, ri) =>
           val cells = tr.childNodes.collect {
-            case e: graft.kernel.Element
+            case e: Element
               if e.tagName.equalsIgnoreCase("td") ||
                 e.tagName.equalsIgnoreCase("th") => e
           }
@@ -227,19 +191,9 @@ object PageMeta {
         }
     }.toSeq
 
-  def tables(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sels = new PageSelectors
-        it.flatMap { case (id, html) =>
-          tableRowsOf(id, parseBytes(html), sels)
-        }
-      }
+  def tables(pages: DataFrame): DataFrame =
+    perPage(pages)(tableRowsOf)
       .toDF("doc_id", "table_idx", "row_idx", "is_header", "cells")
-  }
 
   /** WHATWG srcset microsyntax parser → (url, descriptor) candidates in
     * declaration order. The splitting rule is NOT split-on-comma — URLs
@@ -305,9 +259,8 @@ object PageMeta {
     * the multimodal layer: join fetched payloads on the resolved url and
     * the (image bytes, alt text) pair table falls out.
     */
-  def imagesOf(id: Long, root: graft.kernel.Element,
-      s: PageSelectors): Seq[(Long, Int, String, String, String)] =
-    Query.querySelectorAll(root, s.img).iterator.zipWithIndex.map {
+  def imagesOf(id: Long, root: Element): Seq[(Long, Int, String, String, String)] =
+    Query.querySelectorAll(root, ImgSel).iterator.zipWithIndex.map {
       case (img, i) =>
         val src = img.getAttribute("src").getOrElse("")
         val alt = img.getAttribute("alt").getOrElse("")
@@ -317,17 +270,8 @@ object PageMeta {
         (id, i, src, alt, srcset)
     }.toSeq
 
-  def images(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sels = new PageSelectors
-        it.flatMap { case (id, html) => imagesOf(id, parseBytes(html), sels) }
-      }
-      .toDF("doc_id", "img_idx", "src", "alt", "srcset")
-  }
+  def images(pages: DataFrame): DataFrame =
+    perPage(pages)(imagesOf).toDF("doc_id", "img_idx", "src", "alt", "srcset")
 
   /** SOCIAL-CARD metadata (OpenGraph + Twitter cards) — the
     * publisher-declared summary every caption/article pipeline mines
@@ -341,10 +285,10 @@ object PageMeta {
     * card emit NOTHING (the common case at crawl scale — the output table
     * is sparse).
     */
-  def socialMetaOf(id: Long, root: graft.kernel.Element,
-      s: PageSelectors): Option[(Long, String, String, String, String, String, String)] = {
+  def socialMetaOf(id: Long,
+      root: Element): Option[(Long, String, String, String, String, String, String)] = {
     var ogTitle, ogDesc, ogImage, ogUrl, ogType, twCard: String = null
-    Query.querySelectorAll(root, s.meta).foreach { m =>
+    Query.querySelectorAll(root, MetaSel).foreach { m =>
       val key = m.getAttribute("property").orElse(m.getAttribute("name"))
         // Locale.ROOT: under a Turkish default locale 'OG:TITLE' would
         // lowercase to a dotless-i key and silently never match
@@ -367,18 +311,10 @@ object PageMeta {
       Option(ogType).getOrElse(""), Option(twCard).getOrElse("")))
   }
 
-  def socialMeta(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sels = new PageSelectors
-        it.flatMap { case (id, html) => socialMetaOf(id, parseBytes(html), sels) }
-      }
+  def socialMeta(pages: DataFrame): DataFrame =
+    perPage(pages)(socialMetaOf)
       .toDF("doc_id", "og_title", "og_description", "og_image", "og_url",
         "og_type", "twitter_card")
-  }
 
   /** IMAGE-CAPTION pairs from semantic figure markup — the richest
     * publisher-authored caption signal a page carries (`alt` text is
@@ -391,8 +327,7 @@ object PageMeta {
     * [[graft.ops.UrlOps.resolveUrl]]/[[graft.ops.UrlOps.documentBase]]
     * downstream like every url here.
     */
-  def captionsOf(id: Long, root: graft.kernel.Element,
-      s: PageSelectors): Seq[(Long, Int, String, String, String)] = {
+  def captionsOf(id: Long, root: Element): Seq[(Long, Int, String, String, String)] = {
     // ownership: a node belongs to the figure that is its NEAREST figure
     // ancestor — nested galleries (<figure><figcaption>Gallery</figcaption>
     // <figure><img…><figcaption>Photo</figcaption></figure></figure>)
@@ -402,7 +337,7 @@ object PageMeta {
     // quadratic on pathologically nested figures; rows keep the FIGURE's
     // document order (frames record their entry rank, output sorts by it)
     final class Frame(val rank: Int) {
-      var img: graft.kernel.Element = null
+      var img: Element = null
       var caption: String = null
     }
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String)]
@@ -412,7 +347,7 @@ object PageMeta {
     var rank = 0
     while (stack.nonEmpty) {
       stack.remove(stack.length - 1) match {
-        case e: graft.kernel.Element =>
+        case e: Element =>
           val t = e.tagName
           if (t.equalsIgnoreCase("figure")) {
             frames += new Frame(rank); rank += 1
@@ -427,7 +362,7 @@ object PageMeta {
           var j = e.childNodes.length - 1
           while (j >= 0) {
             e.childNodes(j) match {
-              case c: graft.kernel.Element => stack += c
+              case c: Element => stack += c
               case _ =>
             }
             j -= 1
@@ -446,17 +381,9 @@ object PageMeta {
   }
   private object FrameEnd
 
-  def captions(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sels = new PageSelectors
-        it.flatMap { case (id, html) => captionsOf(id, parseBytes(html), sels) }
-      }
+  def captions(pages: DataFrame): DataFrame =
+    perPage(pages)(captionsOf)
       .toDF("doc_id", "fig_idx", "img_src", "img_alt", "caption")
-  }
 
   /** MEDIA-SOURCE extraction (`video` / `audio` / `picture`) — the URL
     * table a multimodal corpus fetch starts from: one row per media
@@ -471,10 +398,10 @@ object PageMeta {
     * frame-sampling multimodal ops by joining fetched payloads on the
     * resolved url.
     */
-  def mediaSourcesOf(id: Long, root: graft.kernel.Element): Seq[(Long, Int, Int, String, String, String, String, String)] = {
+  def mediaSourcesOf(id: Long, root: Element): Seq[(Long, Int, Int, String, String, String, String, String)] = {
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Int, Int, String, String, String, String, String)]
-    val stack = new scala.collection.mutable.ArrayBuffer[graft.kernel.Element](32)
+    val stack = new scala.collection.mutable.ArrayBuffer[Element](32)
     stack += root
     var mIdx = 0
     while (stack.nonEmpty) {
@@ -487,7 +414,7 @@ object PageMeta {
           item += 1
         }
         e.childNodes.foreach {
-          case c: graft.kernel.Element if c.tagName.equalsIgnoreCase("source") =>
+          case c: Element if c.tagName.equalsIgnoreCase("source") =>
             val url = c.getAttribute("src").orElse(
               c.getAttribute("srcset").map(ss => parseSrcset(ss)
                 .map { case (u, d) => if (d.isEmpty) u else u + " " + d }
@@ -503,7 +430,7 @@ object PageMeta {
       var j = e.childNodes.length - 1
       while (j >= 0) {
         e.childNodes(j) match {
-          case c: graft.kernel.Element => stack += c
+          case c: Element => stack += c
           case _ =>
         }
         j -= 1
@@ -512,17 +439,10 @@ object PageMeta {
     out.toSeq
   }
 
-  def mediaSources(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, html) => mediaSourcesOf(id, parseBytes(html)) }
-      }
+  def mediaSources(pages: DataFrame): DataFrame =
+    perPage(pages)(mediaSourcesOf)
       .toDF("doc_id", "media_idx", "item_idx", "tag", "kind", "url",
         "media", "mime")
-  }
 
   /** hreflang ALTERNATES — the multilingual-corpus construction signal:
     * `<link rel="alternate" hreflang=".." href="..">` clusters the same
@@ -531,9 +451,8 @@ object PageMeta {
     * order; entries missing href or hreflang are skipped (they are not
     * language alternates). Map-only kernel pass like every extractor here.
     */
-  def alternatesOf(id: Long, root: graft.kernel.Element,
-      s: PageSelectors): Seq[(Long, Int, String, String)] =
-    Query.querySelectorAll(root, s.alternate).iterator
+  def alternatesOf(id: Long, root: Element): Seq[(Long, Int, String, String)] =
+    Query.querySelectorAll(root, AlternateSel).iterator
       .flatMap { l =>
         for {
           lang <- l.getAttribute("hreflang").filter(_.nonEmpty)
@@ -544,19 +463,8 @@ object PageMeta {
       .map { case ((lang, href), i) => (id, i, lang, href) }
       .toSeq
 
-  def alternates(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sels = new PageSelectors
-        it.flatMap { case (id, html) =>
-          alternatesOf(id, parseBytes(html), sels)
-        }
-      }
-      .toDF("doc_id", "alt_idx", "hreflang", "href")
-  }
+  def alternates(pages: DataFrame): DataFrame =
+    perPage(pages)(alternatesOf).toDF("doc_id", "alt_idx", "hreflang", "href")
 
   /** META-REFRESH redirects — the html-level redirect mechanism crawlers
     * must honor next to HTTP 3xx (soft-404 pages, moved content, interstitials
@@ -575,9 +483,8 @@ object PageMeta {
   private val RefreshRe =
     """(?i)^\s*(\d+)(?:\.\d*)?\s*(?:[;,\s]\s*url\s*=\s*['"]?([^'"]*)['"]?\s*)?$""".r
 
-  def metaRefreshOf(id: Long, root: graft.kernel.Element,
-      s: PageSelectors): Option[(Long, Long, String)] =
-    Query.querySelectorAll(root, s.meta).iterator
+  def metaRefreshOf(id: Long, root: Element): Option[(Long, Long, String)] =
+    Query.querySelectorAll(root, MetaSel).iterator
       .filter(_.getAttribute("http-equiv").exists(_.equalsIgnoreCase("refresh")))
       .flatMap(_.getAttribute("content"))
       .flatMap {
@@ -588,19 +495,8 @@ object PageMeta {
       }
       .take(1).toSeq.headOption // first valid declaration wins, like browsers
 
-  def metaRefresh(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val sels = new PageSelectors
-        it.flatMap { case (id, html) =>
-          metaRefreshOf(id, parseBytes(html), sels)
-        }
-      }
-      .toDF("doc_id", "delay_sec", "target")
-  }
+  def metaRefresh(pages: DataFrame): DataFrame =
+    perPage(pages)(metaRefreshOf).toDF("doc_id", "delay_sec", "target")
 
   /** RECIPROCAL hreflang verification — the bidirectional-confirmation
     * join parallel-corpus miners run before trusting a language pair: page
@@ -643,7 +539,7 @@ object PageMeta {
     * corpus scale even when per-page heuristics pass it). Iterative DFS,
     * O(doc), no strings materialized.
     */
-  def templateFpOf(root: graft.kernel.Element): Long = {
+  def templateFpOf(root: Element): Long = {
     val FnvPrime = 0x100000001b3L
     var h = 0xcbf29ce484222325L
     def mixChar(c: Char): Unit = { h = (h ^ c) * FnvPrime }
@@ -651,7 +547,7 @@ object PageMeta {
     stack += root
     while (stack.nonEmpty) {
       stack.remove(stack.length - 1) match {
-        case e: graft.kernel.Element =>
+        case e: Element =>
           mixChar('<')
           val t = e.tagName
           var i = 0
@@ -660,7 +556,7 @@ object PageMeta {
           var j = e.childNodes.length - 1
           while (j >= 0) {
             e.childNodes(j) match {
-              case c: graft.kernel.Element => stack += c
+              case c: Element => stack += c
               case _ => // text/comments are NOT part of the template
             }
             j -= 1
@@ -681,13 +577,7 @@ object PageMeta {
     * scale.
     */
   def templates(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val fps = pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, html) => (id, templateFpOf(parseBytes(html))) }
-      }
+    val fps = perPage(pages)((id, root) => Iterator.single((id, templateFpOf(root))))
       .toDF("doc_id", "template_fp")
       // one kernel pass: the 16-byte (doc_id, fp) rows are materialized
       // (lazy localCheckpoint) so the group aggregation and the join-back
@@ -729,9 +619,9 @@ object PageMeta {
     * heading text. One iterative DFS per page, rows
     * (doc_id, pos, level, heading-text).
     */
-  def outlineOf(id: Long, root: graft.kernel.Element): Seq[(Long, Int, Int, String)] = {
+  def outlineOf(id: Long, root: Element): Seq[(Long, Int, Int, String)] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int, String)]
-    val stack = new scala.collection.mutable.ArrayBuffer[graft.kernel.Element](32)
+    val stack = new scala.collection.mutable.ArrayBuffer[Element](32)
     stack += root
     var pos = 0
     while (stack.nonEmpty) {
@@ -749,7 +639,7 @@ object PageMeta {
         var j = e.childNodes.length - 1
         while (j >= 0) {
           e.childNodes(j) match {
-            case c: graft.kernel.Element => stack += c
+            case c: Element => stack += c
             case _ =>
           }
           j -= 1
@@ -759,16 +649,8 @@ object PageMeta {
     out.toSeq
   }
 
-  def outline(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.select(col("doc_id").cast("long"), col("html"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, html) => outlineOf(id, parseBytes(html)) }
-      }
-      .toDF("doc_id", "pos", "level", "heading")
-  }
+  def outline(pages: DataFrame): DataFrame =
+    perPage(pages)(outlineOf).toDF("doc_id", "pos", "level", "heading")
 
   /** HOST-level link graph rollup — the domain-granularity view every
     * crawl ranks and curates with (page-level graphs are too big to eyeball

@@ -83,13 +83,16 @@ class HtmlFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
         |       css_first_attr(CAST(NULL AS STRING), 'a', 'href') AS h,
         |       html_text(CAST(NULL AS STRING)) AS s,
         |       html_outer(CAST(NULL AS STRING)) AS o,
-        |       html_valid(CAST(NULL AS STRING)) AS v
+        |       html_valid(CAST(NULL AS STRING)) AS v,
+        |       html_unescape(NULL) AS u0,
+        |       html_unescape(CAST(NULL AS STRING)) AS u1
         |""".stripMargin).collect().head
     assert(r.getInt(0) == 0)
     assert(r.isNullAt(1))
     assert(r.getInt(2) == 0)
     (3 to 6).foreach(i => assert(r.isNullAt(i), s"column $i"))
     assert(!r.getBoolean(7))
+    (8 to 9).foreach(i => assert(r.isNullAt(i), s"column $i"))
     // a null row between two equal documents, through generated code
     import spark.implicits._
     val doc = "<p>a</p><p>b</p>"
@@ -97,6 +100,22 @@ class HtmlFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("id"), countNative(col("h"), "p"), HtmlFunctions.cssFirstText(col("h"), lit("p")))
       .orderBy("id").collect().map(r => (r.getInt(1), Option(r.getString(2)))).toSeq
     assert(counts == Seq((2, Some("a")), (0, None), (2, Some("a"))))
+  }
+
+  test("html_unescape is the native HtmlUnescape: same result as html_unescape_native") {
+    val q = spark.sql(
+      """SELECT html_unescape('&lt;&ampx&copyright;') AS u,
+        |       html_unescape('&lt;&ampx&copyright;') =
+        |         html_unescape_native('&lt;&ampx&copyright;') AS same
+        |""".stripMargin)
+    assert(q.queryExecution.analyzed.expressions
+      .exists(_.collectFirst { case _: HtmlUnescape => () }.nonEmpty))
+    val r = q.collect().head
+    assert(r.getString(0) == "<&x©right;")
+    assert(r.getBoolean(1))
+    // a non-string argument is rejected at analysis, not cast
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT html_unescape(1)").collect())
   }
 
   test("mutateDemo between two css_first_text calls does not change the second result") {

@@ -172,10 +172,9 @@ class CorpusSpec extends AnyFunSuite {
     "nice.html" -> ((5, 0, "958677d6df1cb962852a9ad1bac186d1")))
 
   test("real-page goldens: image-text pairs (count, srcset presence, content md5)") {
-    val sels = new graft.ops.PageMeta.PageSelectors
     imageGoldens.foreach { case (name, (n, nSrcset, m)) =>
       whenPresent(name) { html =>
-        val imgs = graft.ops.PageMeta.imagesOf(0L, HtmlParser.parse(html), sels)
+        val imgs = graft.ops.PageMeta.imagesOf(0L, HtmlParser.parse(html))
         assert(imgs.length == n, s"$name image count")
         assert(imgs.count(_._5.nonEmpty) == nSrcset, s"$name srcset count")
         assert(md5(imgs.map(r => s"${r._3}\t${r._4}\t${r._5}")
@@ -185,20 +184,19 @@ class CorpusSpec extends AnyFunSuite {
   }
 
   test("real-page goldens: template fingerprint, hreflang alternates, no meta-refresh") {
-    val sels = new graft.ops.PageMeta.PageSelectors
     extractorGoldens.foreach { case (name, (fp, alts)) =>
       whenPresent(name) { html =>
         val root = HtmlParser.parse(html)
         assert(graft.ops.PageMeta.templateFpOf(root) == fp, s"$name template fp")
-        assert(graft.ops.PageMeta.alternatesOf(0L, root, sels)
+        assert(graft.ops.PageMeta.alternatesOf(0L, root)
           .map(a => a._3 + "=" + a._4) == alts, s"$name alternates")
-        assert(graft.ops.PageMeta.metaRefreshOf(0L, root, sels).isEmpty,
+        assert(graft.ops.PageMeta.metaRefreshOf(0L, root).isEmpty,
           s"$name meta refresh false positive")
         // none of the corpus pages declares a social card or semantic
         // figure markup — pins no false positives on real HTML (round 5)
-        assert(graft.ops.PageMeta.socialMetaOf(0L, root, sels).isEmpty,
+        assert(graft.ops.PageMeta.socialMetaOf(0L, root).isEmpty,
           s"$name social-card false positive")
-        assert(graft.ops.PageMeta.captionsOf(0L, root, sels).isEmpty,
+        assert(graft.ops.PageMeta.captionsOf(0L, root).isEmpty,
           s"$name figure-caption false positive")
         assert(graft.ops.PageMeta.mediaSourcesOf(0L, root).isEmpty,
           s"$name media-source false positive")
@@ -207,23 +205,22 @@ class CorpusSpec extends AnyFunSuite {
   }
 
   test("real-page heuristics match goldens: boilerplate / headMeta / outlinks / tables") {
-    val sels = new graft.ops.PageMeta.PageSelectors
     heuristicGoldens.foreach { case (name, g) =>
       whenPresent(name) { html =>
         val root = HtmlParser.parse(html)
         val mc = Boilerplate.mainContent(html)
         assert(md5(mc.main_text) == g.mainMd5, s"$name main_text")
         assert(mc.n_stripped == g.nStripped, s"$name n_stripped")
-        val hm = graft.ops.PageMeta.headMetaOf(0L, root, sels)
+        val hm = graft.ops.PageMeta.headMetaOf(0L, root)
         assert(md5(hm.title) == g.titleMd5, s"$name title")
         assert(md5(hm.description) == g.descMd5, s"$name description")
         assert(hm.canonical == g.canonical, s"$name canonical")
         assert(hm.noindex == g.noindex, s"$name noindex")
-        val links = graft.ops.PageMeta.outlinksOf(0L, root, sels)
+        val links = graft.ops.PageMeta.outlinksOf(0L, root)
         assert(links.size == g.nLinks, s"$name link count")
         assert(md5(links.map(l => s"${l.href}\t${l.anchor}\t${l.nofollow}")
           .mkString("\n")) == g.linksMd5, s"$name links")
-        val rows = graft.ops.PageMeta.tableRowsOf(0L, root, sels)
+        val rows = graft.ops.PageMeta.tableRowsOf(0L, root)
         assert(rows.size == g.nTableRows, s"$name table-row count")
         assert(md5(rows.map(r => s"${r._2}\t${r._3}\t${r._4}\t${r._5}")
           .mkString("\n")) == g.tablesMd5, s"$name tables")

@@ -104,27 +104,148 @@ class PageMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.getAs[String]("resolved") == "https://h.example/dir/sub/up/p.html")
   }
 
-  test("real-page golden: gmail.html's real <base href> rides every edge; injected base honored") {
-    def read(p: String) = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(p)), "UTF-8")
-    // gmail.html declares a REAL base — the exact production shape this
-    // feature exists for (reference test/html/gmail.html)
-    val gmail = PageMeta.outlinksWithBase(pagesOf(
-      read("/root/reference/test/html/gmail.html"))).collect()
-    assert(gmail.nonEmpty)
-    assert(gmail.forall(
-      _.getAs[String]("page_base") == "https://mail.google.com/mail/u/0/"))
-    // hillcrest declares none (29 real anchors) — and an injected base is
-    // picked up without disturbing the edge set
-    val page = read("/root/reference/test/html/hillcrestpartyrentals.html")
+  /** A hand-written page under src/test/resources/pages. */
+  private def fixturePage(name: String): String =
+    new String(getClass.getResourceAsStream(s"/pages/$name").readAllBytes(), "UTF-8")
+
+  test("fixture-page golden: a declared <base href> rides every edge; injected base honored") {
+    // cdn_docs.html declares its base in <head> and links relative to it,
+    // the production shape this feature exists for
+    val docs = PageMeta.outlinksWithBase(pagesOf(fixturePage("cdn_docs.html"))).collect()
+    assert(docs.length >= 20)
+    assert(docs.forall(
+      _.getAs[String]("page_base") == "https://static.docs.example/manual/v3/"))
+    // corner_bakery.html declares none — and an injected base is picked up
+    // without disturbing the edge set
+    val page = fixturePage("corner_bakery.html")
     val plain = PageMeta.outlinksWithBase(pagesOf(page)).collect()
-    assert(plain.nonEmpty && plain.forall(_.getAs[String]("page_base") == ""))
+    assert(plain.length >= 20 && plain.forall(_.getAs[String]("page_base") == ""))
     val injected = page.replaceFirst("<head>",
       "<head><base href=\"https://base.example/g/\">")
     assert(injected != page)
     val rows = PageMeta.outlinksWithBase(pagesOf(injected)).collect()
-    assert(rows.length == plain.length)
+    def edges(rs: Array[org.apache.spark.sql.Row]) = rs.toSeq.map(r =>
+      (r.getAs[String]("href"), r.getAs[String]("anchor"), r.getAs[Boolean]("nofollow")))
+    assert(edges(rows) == edges(plain))
     assert(rows.forall(_.getAs[String]("page_base") == "https://base.example/g/"))
+  }
+
+  /** Page `i` of the mixed corpus: each extractor's markup appears on its
+    * own residue class of `i`, so pages differ in which extractors emit rows.
+    */
+  private def mixedPage(i: Int): String = {
+    val sb = new StringBuilder("<html><head>")
+    if (i % 3 == 0)
+      sb ++= s"<title>Page $i &amp; co</title><meta name=\"description\" content=\"d $i\">"
+    if (i % 4 == 1) sb ++= s"<base href=\"https://cdn$i.example/\">"
+    if (i % 5 == 2)
+      sb ++= s"<link rel=\"canonical\" href=\"https://e/$i\"><meta name=\"robots\" content=\"noindex\">"
+    if (i % 6 == 3)
+      sb ++= s"<meta property=\"og:title\" content=\"og $i\"><meta name=\"twitter:card\" content=\"summary\">"
+    if (i % 7 == 4) sb ++= s"<link rel=\"alternate\" hreflang=\"de\" href=\"https://e/de/$i\">"
+    if (i % 8 == 5) sb ++= s"<meta http-equiv=\"refresh\" content=\"${i % 10};url=/next/$i\">"
+    // the JSON-LD body survives only a parse that keeps script bodies
+    if (i % 3 == 1)
+      sb ++= "<script type=\"application/ld+json\">" +
+        s"""{"@context": "https://schema.org", "name": "a < b & c $i"}</script>"""
+    sb ++= "</head><body>"
+    (0 until i % 5).foreach { j =>
+      val rel = if (j == 1) "nofollow" else "next"
+      sb ++= s"<a href=\"/p$i/$j\" rel=\"$rel\">link &amp; $j</a>"
+    }
+    if (i % 4 == 0) sb ++= s"<h1>Top $i</h1><div><h2>Sub</h2></div>"
+    if (i % 3 == 2) sb ++= s"<table><tr><th>k</th><th>v</th></tr><tr><td>$i</td><td>x</td></tr></table>"
+    if (i % 5 == 3) sb ++= s"<img src=\"/i$i.png\" alt=\"img $i\" srcset=\"/i$i.png 1x, /i$i@2x.png 2x\">"
+    if (i % 6 == 1) sb ++= s"<figure><img src=\"/f$i.png\"><figcaption>fig $i</figcaption></figure>"
+    if (i % 7 == 0) sb ++= s"<video src=\"/v$i.mp4\"><source src=\"/v$i.webm\" type=\"video/webm\"></video>"
+    if (i % 9 == 8) sb ++= "<div><p>unclosed" // malformed
+    sb ++= "</body></html>"
+    sb.toString
+  }
+
+  test("the lift: every Dataset extractor over 40 pages in 4 partitions equals its per-page function") {
+    import spark.implicits._
+    import graft.kernel.{Element, HtmlParser, ParseOptions}
+    val docs: Seq[(Long, String)] =
+      // pages 30–36 repeat pages 0–6, so those pairs share a template
+      (0 until 37).map(i => i.toLong -> mixedPage(i % 30)) ++ Seq(
+        37L -> "",
+        100L -> fixturePage("cdn_docs.html"),
+        101L -> fixturePage("corner_bakery.html"))
+    val pages = spark.sparkContext
+      .parallelize(docs.map { case (id, h) => (id, h.getBytes("UTF-8")) }, 4)
+      .toDF("doc_id", "html")
+    assert(pages.rdd.getNumPartitions == 4)
+    def onDriver[T <: Product](opts: ParseOptions)(
+        f: (Long, Element) => IterableOnce[T]): Seq[Seq[Any]] =
+      docs.flatMap { case (id, h) =>
+        f(id, HtmlParser.parse(h, opts)).iterator.map(_.productIterator.toSeq)
+      }
+    def expect[T <: Product](f: (Long, Element) => IterableOnce[T]) =
+      onDriver(ParseOptions())(f)
+    val cases: Seq[(String, org.apache.spark.sql.DataFrame, Seq[String], Seq[Seq[Any]])] = Seq(
+      ("headMeta", PageMeta.headMeta(pages).toDF(),
+        Seq("doc_id", "title", "description", "canonical", "noindex"),
+        expect((id, r) => Iterator.single(PageMeta.headMetaOf(id, r)))),
+      ("outlinks", PageMeta.outlinks(pages).toDF(),
+        Seq("doc_id", "href", "anchor", "nofollow"), expect(PageMeta.outlinksOf)),
+      ("outlinksWithBase", PageMeta.outlinksWithBase(pages),
+        Seq("doc_id", "href", "anchor", "nofollow", "page_base"),
+        expect { (id, r) =>
+          val base = PageMeta.pageBaseOf(r)
+          PageMeta.outlinksOf(id, r).map(o => (o.doc_id, o.href, o.anchor, o.nofollow, base))
+        }),
+      ("jsonLd", PageMeta.jsonLd(pages), Seq("doc_id", "block_idx", "json"),
+        onDriver(ParseOptions(script = true))(PageMeta.jsonLdOf)),
+      ("tables", PageMeta.tables(pages),
+        Seq("doc_id", "table_idx", "row_idx", "is_header", "cells"),
+        expect(PageMeta.tableRowsOf)),
+      ("images", PageMeta.images(pages),
+        Seq("doc_id", "img_idx", "src", "alt", "srcset"), expect(PageMeta.imagesOf)),
+      ("socialMeta", PageMeta.socialMeta(pages),
+        Seq("doc_id", "og_title", "og_description", "og_image", "og_url", "og_type",
+          "twitter_card"), expect(PageMeta.socialMetaOf)),
+      ("captions", PageMeta.captions(pages),
+        Seq("doc_id", "fig_idx", "img_src", "img_alt", "caption"), expect(PageMeta.captionsOf)),
+      ("mediaSources", PageMeta.mediaSources(pages),
+        Seq("doc_id", "media_idx", "item_idx", "tag", "kind", "url", "media", "mime"),
+        expect(PageMeta.mediaSourcesOf)),
+      ("alternates", PageMeta.alternates(pages),
+        Seq("doc_id", "alt_idx", "hreflang", "href"), expect(PageMeta.alternatesOf)),
+      ("metaRefresh", PageMeta.metaRefresh(pages),
+        Seq("doc_id", "delay_sec", "target"), expect(PageMeta.metaRefreshOf)),
+      ("outline", PageMeta.outline(pages),
+        Seq("doc_id", "pos", "level", "heading"), expect(PageMeta.outlineOf)))
+    cases.foreach { case (name, df, columns, expected) =>
+      assert(df.columns.toSeq == columns, name)
+      assert(expected.map(_.head).distinct.length >= 3, s"$name: too few pages emit rows")
+      // row order too: the lift keeps document order within each partition
+      assert(df.collect().toSeq.map(_.toSeq) == expected, name)
+    }
+    // a parse that drops script bodies would emit each block as ""
+    val jsonLd = cases.find(_._1 == "jsonLd").get._4
+    assert(jsonLd.forall(_(2).asInstanceOf[String].contains("\"@context\"")))
+    // templates: the fingerprint pass, then its group aggregation
+    val fps = docs.map { case (id, h) => id -> PageMeta.templateFpOf(HtmlParser.parse(h)) }
+    val expectedTemplates = fps.map { case (id, fp) =>
+      val group = fps.filter(_._2 == fp).map(_._1)
+      Seq(id, fp, group.length.toLong, group.min)
+    }
+    assert(expectedTemplates.exists(_(2) != 1L)) // some pages share a template
+    val templates = PageMeta.templates(pages)
+    assert(templates.columns.toSeq ==
+      Seq("doc_id", "template_fp", "template_docs", "template_rep"))
+    assert(templates.collect().toSeq.map(_.toSeq).sortBy(_.head.asInstanceOf[Long]) ==
+      expectedTemplates.sortBy(_.head.asInstanceOf[Long]))
+  }
+
+  test("q26 corpus golden reads the in-repo fixture pages; a missing directory throws") {
+    val rows = CorpusGolden.run(spark).collect()
+    val names = new java.io.File("src/test/resources/pages").list().toSeq.sorted
+    assert(names == Seq("cdn_docs.html", "corner_bakery.html"))
+    assert(rows.map(_.getAs[String]("name")).toSeq.sorted == names)
+    assert(rows.forall(_.getAs[Long]("n_nodes") > 100L))
+    intercept[IllegalArgumentException](CorpusGolden.run(spark, "src/test/resources/absent"))
   }
 
   test("parseSrcset: w/x descriptors, commas inside URLs, trailing commas, descriptor-less") {
@@ -253,18 +374,17 @@ class PageMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
       "</div>" * 50000
     val t0 = System.nanoTime()
     val root = graft.kernel.HtmlParser.parse(deep)
-    val sels = new PageMeta.PageSelectors
     assert(PageMeta.templateFpOf(root) != 0L)
-    PageMeta.headMetaOf(0L, root, sels)
-    assert(PageMeta.outlinksOf(0L, root, sels).nonEmpty)
-    assert(PageMeta.tableRowsOf(0L, root, sels).nonEmpty)
-    assert(PageMeta.alternatesOf(0L, root, sels).nonEmpty)
-    PageMeta.metaRefreshOf(0L, root, sels)
+    PageMeta.headMetaOf(0L, root)
+    assert(PageMeta.outlinksOf(0L, root).nonEmpty)
+    assert(PageMeta.tableRowsOf(0L, root).nonEmpty)
+    assert(PageMeta.alternatesOf(0L, root).nonEmpty)
+    PageMeta.metaRefreshOf(0L, root)
     // round-5 extractors on the same probe
-    PageMeta.pageBaseOf(root, sels)
-    PageMeta.imagesOf(0L, root, sels)
-    PageMeta.socialMetaOf(0L, root, sels)
-    PageMeta.captionsOf(0L, root, sels)
+    PageMeta.pageBaseOf(root)
+    PageMeta.imagesOf(0L, root)
+    PageMeta.socialMetaOf(0L, root)
+    PageMeta.captionsOf(0L, root)
     PageMeta.mediaSourcesOf(0L, root)
     val sec = (System.nanoTime() - t0) / 1e9
     assert(sec < 20.0, s"deep extractors took $sec s — quadratic regression?")
@@ -277,8 +397,7 @@ class PageMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
     val depth = 20000
     val deep = "<figure>" * depth + "<img src=\"/deep.png\">" + "</figure>" * depth
     val t0 = System.nanoTime()
-    val rows = PageMeta.captionsOf(0L, graft.kernel.HtmlParser.parse(deep),
-      new PageMeta.PageSelectors)
+    val rows = PageMeta.captionsOf(0L, graft.kernel.HtmlParser.parse(deep))
     val sec = (System.nanoTime() - t0) / 1e9
     // only the INNERMOST figure owns the img (it is every outer figure's
     // descendant but their nearest-figure-ancestor chain stops inside)

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.pipeline.Page
+import graft.pipeline.{ExtractJob, Page}
 
 /** Structured-Streaming form of the pipeline: same kernel per micro-batch,
   * watermarked windowed metrics.
@@ -33,7 +33,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Page]
-    val q = ExtractStream.run(input.toDF())
+    val q = ExtractJob.run(input.toDF())
       .writeStream.format("memory").queryName("parsed_stream")
       .outputMode("append").start()
     try {
@@ -99,7 +99,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val input = MemoryStream[Page]
     val sessions = ExtractStream.hostSessions(
-      ExtractStream.run(input.toDF()), gapMs = 120000L) // 2-minute gap
+      ExtractJob.run(input.toDF()), gapMs = 120000L) // 2-minute gap
     val q = sessions.writeStream.format("memory").queryName("sessions_stream")
       .outputMode("append").start()
     try {
@@ -136,7 +136,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // streaming pass: flush all sessions with a far-future watermark event
     val input = MemoryStream[Page]
     val q = ExtractStream.hostSessions(
-      ExtractStream.run(input.toDF()), gapMs = 120000L)
+      ExtractJob.run(input.toDF()), gapMs = 120000L)
       .writeStream.format("memory").queryName("twin_stream")
       .outputMode("append").start()
     val streamed =
@@ -166,7 +166,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[Page]
-    val metrics = ExtractStream.windowedMetrics(ExtractStream.run(input.toDF()))
+    val metrics = ExtractStream.windowedMetrics(ExtractJob.run(input.toDF()))
     val q = metrics.writeStream.format("memory").queryName("metrics_stream")
       .outputMode("append").start()
     try {
