@@ -12,6 +12,8 @@ package graft
   * throw, naming the file and extractor.
   */
 object AdversarialSweep {
+  private val SweepBase = "https://Sweep.Example:443/dir/sub/page.html?q=1"
+
   def run(args: Array[String]): Int = {
     require(args.length == 1, "usage: adversarial <fuzzDir>")
     val dir = new java.io.File(args(0))
@@ -48,6 +50,13 @@ object AdversarialSweep {
       drive("captionsOf")(graft.ops.PageMeta.captionsOf(0L, root))
       drive("mediaSourcesOf")(graft.ops.PageMeta.mediaSourcesOf(0L, root))
       drive("parseSrcset")(graft.ops.PageMeta.parseSrcset(html.take(4096)))
+      // the raw-text script path: only jsonLdOf parses with script = true
+      drive("jsonLdOf")(graft.ops.PageMeta.jsonLdOf(0L,
+        graft.kernel.HtmlParser.parse(html, graft.kernel.ParseOptions(script = true))))
+      // hostile hrefs straight into URL resolution and canonicalization
+      drive("resolveCanonicalize")(graft.ops.PageMeta.outlinksOf(0L, root).foreach { o =>
+        graft.ops.UrlOps.canonicalizeUrl(graft.ops.UrlOps.resolveUrl(SweepBase, o.href))
+      })
     }
     val wall = (System.nanoTime() - t0) / 1e9
     println(f"[sweep] ${files.length} docs, $calls extractor calls, $failed throws, $wall%.1f s")

@@ -1053,9 +1053,6 @@ object SparkEntry {
       // Every (base-class × href-class) combination lands on a different
       // absolute, and the oracle rebuilds all 30 from parts — a resolver
       // that ignores <base> (or picks the wrong declaration) hash-fails.
-      // The typed boundary between documentBase and resolveUrl is the
-      // documented no-CSE HOF hazard (see UrlOps).
-      import s.implicits._
       val baseTag = when(col("doc_id") % 5 === 0,
           lit("<base href=\"https://b.example/bd/sub/\">"))
         .when(col("doc_id") % 5 === 1, lit("<base href=\"rel/\">"))
@@ -1078,16 +1075,12 @@ object SparkEntry {
       // base_url is PURE doc_id arithmetic — recompute it on the edge rows
       // instead of joining the documents table back (one corpus-wide
       // equi-join removed; the edge extraction stays map-only end to end)
-      val withBase = edges
-        .select(col("doc_id"), col("href"),
+      edges.select(col("doc_id"), col("href"),
+        graft.ops.UrlOps.resolveUrl(
           graft.ops.UrlOps.documentBase(
             concat(lit("https://h"), (col("doc_id") % 20).cast("string"),
-              lit(".example/dir/sub/page.html")), col("page_base"))
-            .as("eff_base"))
-        .as[(Long, String, String)].mapPartitions(identity)
-        .toDF("doc_id", "href", "eff_base")
-      withBase.select(col("doc_id"), col("href"),
-        graft.ops.UrlOps.resolveUrl(col("eff_base"), col("href")).as("resolved"))
+              lit(".example/dir/sub/page.html")), col("page_base")),
+          col("href")).as("resolved"))
     }),
 
     "q79_sitemap_incremental" -> ((s, dir) => {
@@ -1147,32 +1140,19 @@ object SparkEntry {
         lit("\">r</a><a href=\""), absTarget, lit("\">a</a></div>"))
       val edges = graft.ops.PageMeta.outlinksWithBase(
         d.select(col("doc_id"), encode(page, "UTF-8").as("html")))
-      import s.implicits._
-      // typed boundaries between documentBase, resolve, and canonicalize:
-      // the three Column pipelines each contain CodegenFallback HOF folds,
-      // and nesting them in one expression makes Catalyst DUPLICATE the
-      // inner tree into every sub-extraction of the outer one (no CSE for
-      // fallback expressions — measured 15.9 s vs ~1 s at sf0.1). Each
-      // boundary materializes its url once per row. The frontier honors
-      // <base href> (none declared in this synth — documentBase passes the
-      // page url through — but the composition is the production path).
-      // base_url is PURE doc_id arithmetic — recompute it on the edge rows
-      // (q78's optimization): the documents join-back disappears and the
-      // extraction→resolution leg stays map-only
-      val withBase = edges
-        .select(graft.ops.UrlOps.documentBase(
+      // The frontier honors <base href> (none declared in this synth —
+      // documentBase passes the page url through — but the composition is
+      // the production path). base_url is PURE doc_id arithmetic —
+      // recompute it on the edge rows (q78's optimization): the documents
+      // join-back disappears and the extraction→resolution leg stays
+      // map-only
+      val canon = edges.select(graft.ops.UrlOps.canonicalizeUrl(
+        graft.ops.UrlOps.resolveUrl(
+          graft.ops.UrlOps.documentBase(
             concat(lit("https://h"), (col("doc_id") % 20).cast("string"),
               lit(".example/dir/page"), col("doc_id"), lit(".html")),
-            col("page_base"))
-          .as("eff_base"), col("href"))
-        .as[(String, String)].mapPartitions(identity).toDF("eff_base", "href")
-      val resolved = withBase
-        .select(graft.ops.UrlOps.resolveUrl(col("eff_base"), col("href"))
-          .as("resolved"))
-        .as[String].mapPartitions(identity).toDF("resolved")
-      val canon = resolved
-        .select(graft.ops.UrlOps.canonicalizeUrl(col("resolved")).as("url"))
-        .as[String].mapPartitions(identity).toDF("url")
+            col("page_base")),
+          col("href"))).as("url"))
       val robotsTxt = "User-agent: *\nDisallow: /q/3"
       val policy = graft.sources.Robots.parse(robotsTxt) // parse ONCE
       val allowedUdf = udf { (p: String) => policy.isAllowed("graftbot", p) }

@@ -51,6 +51,12 @@ object GraftExtensions {
     registerOne(spark, cssCountDescriptor("css_count_native"))
   }
 
-  private[functions] def registerOne(spark: org.apache.spark.sql.SparkSession, d: Descriptor): Unit =
-    spark.sessionState.functionRegistry.registerFunction(d._1, d._2, d._3)
+  /** Registers `d` unless its name is already taken: queries call
+    * [[register]] on every run, and re-registering would rewrite the
+    * session's registry each time.
+    */
+  private[functions] def registerOne(spark: org.apache.spark.sql.SparkSession, d: Descriptor): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(d._1)) registry.registerFunction(d._1, d._2, d._3)
+  }
 }

@@ -131,8 +131,9 @@ object PageMeta {
     * edge row as `page_base` ("" when the page declares none) — ONE kernel
     * parse serves both extractions, keeping the map-only shape. This is
     * the edge table frontier construction should start from: resolve each
-    * href against `UrlOps.documentBase(page_url, page_base)`, not the page
-    * url alone (q78/q81 compose it that way).
+    * href against the document base, not the page url alone, nested in one
+    * projection — `resolveUrl(documentBase(page_url, page_base), href)`
+    * (q78; q81 wraps it in `canonicalizeUrl`).
     */
   def outlinksWithBase(pages: DataFrame): DataFrame =
     perPage(pages) { (id, root) =>

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for training-data pipelines: language ID, quality
@@ -162,6 +162,14 @@ object TextAnalysis {
     * classes, simplified to an RE2-compatible form).
     */
   val BpeishPattern = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]+|\\s+"
+
+  /** The space-token convention of the n-gram, chunking, repetition and
+    * packing ops: `textCol` split on single spaces, empty tokens (from
+    * runs of spaces) dropped. The SQL text matches their DuckDB oracles'
+    * `list_filter(string_split(text, ' '), x -> x <> '')`.
+    */
+  def spaceTokens(textCol: String): Column =
+    expr(s"filter(split($textCol, ' '), x -> x <> '')")
 
   def tokenCounts(docs: DataFrame, textCol: String = "text"): DataFrame =
     docs
@@ -420,7 +428,7 @@ object TextAnalysis {
   private def wordGrams(df: DataFrame, n: Int, idAlias: String,
       textCol: String): DataFrame =
     df.select(col("doc_id").as(idAlias),
-      expr(s"filter(split($textCol, ' '), x -> x <> '')").as("__toks"))
+      spaceTokens(textCol).as("__toks"))
       .withColumn("__m", size(col("__toks")) - (n - 1))
       .filter(col("__m") >= 1)
       // unhex: the 16 raw digest bytes join/aggregate identically to the
@@ -616,7 +624,7 @@ object TextAnalysis {
   def chunkDocs(docs: DataFrame, chunkTokens: Int = 128, stride: Int = 96,
       textCol: String = "text"): DataFrame = {
     require(chunkTokens >= 1 && stride >= 1, "chunkTokens and stride must be >= 1")
-    val toks = expr(s"filter(split($textCol, ' '), x -> x <> '')")
+    val toks = spaceTokens(textCol)
     docs
       .select(col("doc_id"), toks.as("__toks"))
       .withColumn("__n", size(col("__toks")))
@@ -653,7 +661,7 @@ object TextAnalysis {
     // empty tokens (from whitespace runs) would mint a "" vocab entry whose
     // df drags every such doc's mean up — filter like the sibling ops
     val occ = docs.select(col("doc_id"),
-      explode(expr(s"filter(split($textCol, ' '), x -> x <> '')")).as("tok"))
+      explode(spaceTokens(textCol)).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("cnt"))
       .localCheckpoint(false)
     val dfTab = occ.groupBy("tok").agg(count(lit(1)).as("df"))
@@ -715,7 +723,7 @@ object TextAnalysis {
       maxTop2Frac: Double = 0.20, maxDup3Frac: Double = 0.18): DataFrame = {
     val grams = docs
       .select(col("doc_id"),
-        expr(s"filter(split($textCol, ' '), x -> x <> '')").as("toks"))
+        spaceTokens(textCol).as("toks"))
       .select(col("doc_id"), explode(concat(
         when(size(col("toks")) >= 2,
           expr("transform(sequence(0, size(toks) - 2), " +
@@ -773,7 +781,7 @@ object TextAnalysis {
       textCol: String = "text"): DataFrame = {
     val lines = docs
       .select(col("doc_id"),
-        expr(s"filter(split($textCol, ' '), x -> x <> '')").as("toks"))
+        spaceTokens(textCol).as("toks"))
       .select(col("doc_id"), posexplode(
         when(size(col("toks")) > 0,
           expr(s"transform(sequence(0, size(toks) - 1, $lineTokens), " +

@@ -1,175 +1,148 @@
 package graft.ops
 
+import java.util.regex.Pattern
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** URL canonicalization — the normalizer in front of URL-keyed dedup and
-  * the resume anti-join (two spellings of one URL otherwise double-crawl
-  * and double-store). Deliberately a PURE Column expression: it compiles
-  * into whole-stage codegen next to the scan, so canonicalizing 10^12 urls
-  * costs no UDF boundary and no extra stage.
+/** URL resolution and canonicalization — the normalizer in front of
+  * URL-keyed dedup and the resume anti-join (two spellings of one URL
+  * otherwise double-crawl and double-store).
+  *
+  * [[resolveUrl]], [[documentBase]] and [[canonicalizeUrl]] are plain
+  * `String` functions (null in → null out); each `Column` form is one
+  * code-generated `udf` over its function, so the forms nest in one
+  * projection: `canonicalizeUrl(resolveUrl(documentBase(page, base),
+  * href))`. [[urlHost]], [[urlPath]] and [[hostKey]] are single native
+  * `regexp_extract`s; host and path share their pattern with the `String`
+  * code.
   *
   * Canonical form (RFC 3986 §6 normalizations that preserve identity):
-  *   - scheme and host lowercased (case-insensitive by spec)
+  *   - scheme and host lowercased (ICU case mapping, as Spark's `lower`)
   *   - default port dropped (:80 for http, :443 for https), others kept
   *   - empty path → "/"
-  *   - percent-encoding: UNRESERVED octets decoded (§6.2.2.2 — `%7E`→`~`,
-  *     `%41`→`A`), remaining escapes hex-UPPERCASED (§6.2.2.1); applied to
-  *     path and query (reserved octets like `%2F` stay encoded, so no
-  *     structure changes)
-  *   - dot segments removed from the path (§6.2.2.3 — `/a/./b`→`/a/b`,
-  *     `/a/../b`→`/b`, trailing `/.`|`/..` keeps the slash)
-  *   - query otherwise preserved byte-for-byte (param REORDERING changes
-  *     identity)
-  *   - fragment dropped (never sent to the server)
+  *   - UNRESERVED percent-escapes decoded (§6.2.2.2 — `%7E`→`~`), the
+  *     others hex-UPPERCASED (§6.2.2.1), in path and query; `%2F` stays
+  *   - dot segments removed from the path (§6.2.2.3), after decoding, so
+  *     `%2E` joins dot handling; a trailing `/.`|`/..` keeps the slash
+  *   - query otherwise byte-for-byte; fragment dropped
   *
   * NOT done (identity-changing, documented): www-stripping, param sorting.
-  *
-  * COMPOSITION NOTE (measured, q81): do NOT nest these builders in one
-  * Column — e.g. `canonicalizeUrl(resolveUrl(b, r))` — on a hot path. The
-  * HOF folds ([[removeDotSegments]]'s `aggregate`, [[decodeUnreserved]]'s
-  * `transform`) are CodegenFallback expressions and Catalyst applies no
-  * common-subexpression elimination to them, so the outer builder's ~8
-  * references to its input each re-evaluate the ENTIRE inner tree
-  * (15.9 s → 1.1 s at sf0.1 after the fix). Materialize between stages —
-  * a typed boundary (`as[String].mapPartitions(identity)`) or a
-  * checkpoint — so each url is computed once per row.
   */
 object UrlOps {
 
-  def urlScheme(u: Column): Column =
-    lower(regexp_extract(u, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
+  private val Scheme = Pattern.compile("^([A-Za-z][A-Za-z0-9+.-]*)://")
+  private val Host = Pattern.compile("^[^:/?#]+://([^/:?#]+)")
+  private val Port = Pattern.compile("^[^:/?#]+://[^/:?#]+:([0-9]+)")
+  private val Path = Pattern.compile("^[^:/?#]+://[^/?#]+([^?#]*)")
+  private val Query = Pattern.compile("^[^?#]*(\\?[^#]*)")
+  private val Authority = Pattern.compile("^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)")
+  private val AbsoluteRef = Pattern.compile("^[A-Za-z][A-Za-z0-9+.-]*:")
+  private val HexPair = Pattern.compile("^[0-9A-F]{2}$")
 
-  def urlHost(u: Column): Column =
-    lower(regexp_extract(u, "^[^:/?#]+://([^/:?#]+)", 1))
-
-  def urlPort(u: Column): Column =
-    regexp_extract(u, "^[^:/?#]+://[^/:?#]+:([0-9]+)", 1)
-
-  def urlPath(u: Column): Column =
-    regexp_extract(u, "^[^:/?#]+://[^/?#]+([^?#]*)", 1)
-
-  def urlQuery(u: Column): Column =
-    regexp_extract(u, "^[^?#]*(\\?[^#]*)", 1)
-
-  /** §6.2.2.2 + §6.2.2.1: percent-decode UNRESERVED octets
-    * (ALPHA / DIGIT / `-` / `.` / `_` / `~`) and uppercase the hex digits
-    * of every escape that must remain. Pure Column: split on '%', decode
-    * each chunk's 2-hex prefix via `char(conv(hex,16,10))`, keep reserved
-    * escapes (now hex-uppercased) and malformed '%' runs verbatim. Stays a
-    * native Catalyst expression tree — no UDF boundary in front of
-    * URL-keyed dedup at 10^12 rows.
-    */
-  def decodeUnreserved(u: Column): Column = {
-    val parts = split(u, "%", -1)
-    val head = element_at(parts, 1)
-    val rest = slice(parts, lit(2), greatest(size(parts) - 1, lit(0)))
-    val mapped = transform(rest, p => {
-      val hex = upper(substring(p, 1, 2))
-      val tail = substring(p, 3, Int.MaxValue)
-      val ch = call_function("char", conv(hex, 16, 10).cast("int"))
-      when(hex.rlike("^[0-9A-F]{2}$"),
-        when(ch.rlike("^[A-Za-z0-9._~-]$"), concat(ch, tail))
-          .otherwise(concat(lit("%"), hex, tail)))
-        .otherwise(concat(lit("%"), p)) // malformed escape: keep verbatim
-    })
-    when(size(parts) <= 1, u).otherwise(concat(head, array_join(mapped, "")))
+  /** Group 1 of the first match, "" when there is none (`regexp_extract`). */
+  private def extract(p: Pattern, s: String): String = {
+    val m = p.matcher(s)
+    if (m.find() && m.group(1) != null) m.group(1) else ""
   }
 
-  /** §6.2.2.3 remove_dot_segments over an absolute path, as a pure Column
-    * `aggregate` fold: segments push onto a stack, `..` pops, `.` is
-    * dropped, and a FINAL dot segment keeps the trailing slash (RFC's
-    * buffer algorithm, state = struct(stack, trailing)). Empty segments
-    * (`//`) are preserved — the RFC removes only dot segments.
+  private def lowerCase(s: String): String =
+    com.ibm.icu.lang.UCharacter.toLowerCase(com.ibm.icu.util.ULocale.ROOT, s)
+
+  /** The canonical host: lowercased, up to the first `:/?#`. */
+  def urlHost(u: Column): Column = lower(regexp_extract(u, Host.pattern, 1))
+
+  def urlPath(u: Column): Column = regexp_extract(u, Path.pattern, 1)
+
+  /** The partition key for per-host work (`ExtractJob.run`'s salted
+    * repartition, host sessions): everything between `scheme://` and the
+    * next `/`. Unlike [[urlHost]] it keeps case, port and userinfo.
     */
-  def removeDotSegments(path: Column): Column = {
-    val segs = split(path, "/", -1)
-    val rest = slice(segs, lit(2), greatest(size(segs) - 1, lit(0)))
-    val init = struct(
-      array().cast("array<string>").as("st"), lit(false).as("tr"))
-    val folded = aggregate(rest, init, (acc, s) => {
-      val st = acc.getField("st")
-      when(s === ".", struct(st.as("st"), lit(true).as("tr")))
-        .when(s === "..",
-          struct(slice(st, lit(1), greatest(size(st) - 1, lit(0))).as("st"),
-            lit(true).as("tr")))
-        .otherwise(struct(concat(st, array(s)).as("st"), lit(false).as("tr")))
-    })
-    val st = folded.getField("st")
-    val tr = folded.getField("tr")
-    when((path === "").or(!path.startsWith("/")), path) // non-abs: untouched
-      .otherwise(concat(lit("/"), array_join(st, "/"),
-        when(tr && size(st) > 0, lit("/")).otherwise(lit(""))))
+  def hostKey(u: Column): Column =
+    regexp_extract(u, "^[A-Za-z][A-Za-z0-9+.-]*://([^/]+)", 1)
+
+  /** §6.2.2.2 + §6.2.2.1 on each '%' run; a malformed run stays verbatim. */
+  private def decodeUnreserved(u: String): String = {
+    val parts = u.split("%", -1)
+    if (parts.length == 1) u
+    else parts.iterator.drop(1).map { p =>
+      // `ﬀ` uppercases to "FF" and `$` also matches before a final line
+      // terminator: such an escape decodes its first two chars, keeps the rest
+      val hex = p.take(2).toUpperCase(java.util.Locale.ROOT)
+      if (!HexPair.matcher(hex).find()) "%" + p
+      else {
+        val ch = Integer.parseInt(hex.substring(0, 2), 16).toChar
+        if ((ch < 128 && ch.isLetterOrDigit) || "._~-".indexOf(ch) >= 0) s"$ch${p.drop(2)}"
+        else s"%$hex${p.drop(2)}"
+      }
+    }.mkString(parts(0), "", "")
   }
 
-  /** RFC 3986 §5 reference RESOLUTION — the frontier-construction step:
-    * outlink hrefs on real pages are mostly relative, and a crawl can only
-    * enqueue absolute urls. Pure Column (whole-stage codegen next to the
-    * edge extraction — no UDF between outlinks and the frontier):
-    *
-    *   - absolute refs (with scheme) pass through, minus fragment
-    *   - protocol-relative `//host/p` inherits the base scheme, minus
-    *     fragment
-    *   - root-relative `/p`, query-only `?q`, empty/fragment-only, and
-    *     relative paths (merged onto the base directory) per the RFC
-    *     algorithm, with dot segments removed via [[removeDotSegments]]
-    *   - fragments are DROPPED on resolved output in EVERY branch (never
-    *     sent to servers; a frontier key must not split on them)
+  /** §6.2.2.3 on an absolute path (others pass through): `..` pops, `.`
+    * drops, a final dot segment keeps the slash, empty segments stay.
     */
-  def resolveUrl(base: Column, ref: Column): Column = {
-    val authority = regexp_extract(base, "^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)", 1)
-    val scheme = urlScheme(base)
-    val basePath0 = urlPath(base)
-    val basePath = when(basePath0 === "", lit("/")).otherwise(basePath0)
-    val baseDir = regexp_replace(basePath, "[^/]*$", "")
-    val noFrag = regexp_extract(ref, "^([^#]*)", 1)
-    val refPath = regexp_extract(ref, "^([^?#]*)", 1)
-    val refQuery = regexp_extract(ref, "^[^?#]*(\\?[^#]*)", 1)
-    when(ref.rlike("^[A-Za-z][A-Za-z0-9+.-]*:"), noFrag)
-      .when(ref.startsWith("//"), concat(scheme, lit(":"), noFrag))
-      .when(ref === "" || ref.startsWith("#"),
-        concat(authority, basePath, urlQuery(base)))
-      .when(ref.startsWith("?"), concat(authority, basePath, refQuery))
-      .when(ref.startsWith("/"),
-        concat(authority, removeDotSegments(refPath), refQuery))
-      .otherwise(concat(authority,
-        removeDotSegments(concat(baseDir, refPath)), refQuery))
-  }
+  private def removeDotSegments(path: String): String =
+    if (!path.startsWith("/")) path
+    else {
+      val (st, trailing) = path.split("/", -1).iterator.drop(1)
+        .foldLeft((List.empty[String], false)) {
+          case ((st, _), ".") => (st, true)
+          case ((st, _), "..") => (st.drop(1), true)
+          case ((st, _), seg) => (seg :: st, false)
+        }
+      st.reverse.mkString("/", "/", if (trailing && st.nonEmpty) "/" else "")
+    }
 
-  /** The DOCUMENT BASE hrefs actually resolve against (WHATWG: the first
-    * `base[href]`, itself resolved against the page url; no declaration →
-    * the page url). `baseHref` may be absolute, relative, or ""/null —
-    * "" composes to the page url, matching the spec's "empty href
-    * resolves to the document's URL".
-    *
-    * COMPOSITION NOTE: this contains [[resolveUrl]]'s HOF fold — do NOT
-    * nest it inside another resolveUrl/canonicalizeUrl Column (see the
-    * object scaladoc); materialize the base through a typed boundary
-    * before resolving hrefs against it, as q78/q81 do.
+  /** RFC 3986 §5 reference resolution, fragment dropped in every branch
+    * (a frontier key must not split on it): an absolute ref passes through
+    * (even on a null base), `//host/p` takes the base scheme, and `/p`,
+    * `?q`, ""/`#f` and relative paths resolve against the base per the
+    * RFC, dot segments removed.
     */
-  def documentBase(pageUrl: Column, baseHref: Column): Column =
-    when(baseHref.isNull || baseHref === "", pageUrl)
-      .otherwise(resolveUrl(pageUrl, baseHref))
+  def resolveUrl(base: String, ref: String): String =
+    if (ref == null) null
+    else if (AbsoluteRef.matcher(ref).find()) ref.takeWhile(_ != '#')
+    else if (base == null) null
+    else if (ref.startsWith("//"))
+      lowerCase(extract(Scheme, base)) + ":" + ref.takeWhile(_ != '#')
+    else {
+      val authority = extract(Authority, base)
+      val basePath = Option(extract(Path, base)).filter(_.nonEmpty).getOrElse("/")
+      val refPath = ref.takeWhile(c => c != '?' && c != '#')
+      if (ref.isEmpty || ref.startsWith("#")) authority + basePath + extract(Query, base)
+      else if (ref.startsWith("?")) authority + basePath + extract(Query, ref)
+      else if (ref.startsWith("/")) authority + removeDotSegments(refPath) + extract(Query, ref)
+      else authority + removeDotSegments(basePath.take(basePath.lastIndexOf('/') + 1) +
+        refPath) + extract(Query, ref)
+    }
 
-  def canonicalizeUrl(u: Column): Column = {
-    val scheme = urlScheme(u)
-    val host = urlHost(u)
-    val port = urlPort(u)
-    val portPart = when(
-      port === "" ||
-        (scheme === "http" && port === "80") ||
-        (scheme === "https" && port === "443"), lit(""))
-      .otherwise(concat(lit(":"), port))
-    // percent-decode BEFORE dot-segment removal: %2E decodes to an
-    // unreserved '.', which then participates in dot handling (the RFC's
-    // ordering); %2F stays encoded so no fake path separators appear.
-    // Emptiness is tested on the CHEAP raw path, not on the HOF-bearing
-    // normalized path — per the COMPOSITION NOTE above, referencing the
-    // fold twice would evaluate it twice per row (both folds map "" → "")
-    val rawPath = urlPath(u)
-    val path = removeDotSegments(decodeUnreserved(rawPath))
-    val pathPart = when(rawPath === "", lit("/")).otherwise(path)
-    concat(scheme, lit("://"), host, portPart, pathPart,
-      decodeUnreserved(urlQuery(u)))
-  }
+  def resolveUrl(base: Column, ref: Column): Column = ResolveUdf(base, ref)
+  private val ResolveUdf = udf(resolveUrl(_: String, _: String)).withName("resolve_url")
+
+  /** The DOCUMENT BASE hrefs resolve against (WHATWG): the `<base href>`
+    * resolved against the page url, or the page url when it is ""/null.
+    */
+  def documentBase(pageUrl: String, baseHref: String): String =
+    if (baseHref == null || baseHref.isEmpty) pageUrl else resolveUrl(pageUrl, baseHref)
+
+  def documentBase(pageUrl: Column, baseHref: Column): Column = BaseUdf(pageUrl, baseHref)
+  private val BaseUdf = udf(documentBase(_: String, _: String)).withName("document_base")
+
+  /** The canonical form above; a string with no `scheme://host` still gets
+    * the frame (`"x"` → `":///"`).
+    */
+  def canonicalizeUrl(u: String): String =
+    if (u == null) null
+    else {
+      val scheme = lowerCase(extract(Scheme, u))
+      val port = extract(Port, u)
+      val defaultPort = port.isEmpty || scheme == "http" && port == "80" ||
+        scheme == "https" && port == "443"
+      val path = extract(Path, u)
+      scheme + "://" + lowerCase(extract(Host, u)) + (if (defaultPort) "" else ":" + port) +
+        (if (path.isEmpty) "/" else removeDotSegments(decodeUnreserved(path))) +
+        decodeUnreserved(extract(Query, u))
+    }
+
+  def canonicalizeUrl(u: Column): Column = CanonicalUdf(u)
+  private val CanonicalUdf = udf(canonicalizeUrl(_: String)).withName("canonicalize_url")
 }

@@ -87,8 +87,7 @@ object ExtractJob {
         // pmod column would collapse the key space and can RE-concentrate
         // it when repartition hashes the few salt values again.
         pruned
-          .withColumn("__host",
-            regexp_extract(col("url"), "^[A-Za-z][A-Za-z0-9+.-]*://([^/]+)", 1))
+          .withColumn("__host", graft.ops.UrlOps.hostKey(col("url")))
           .repartition(saltPartitions, col("__host"), pmod(hash(col("url")), lit(16)))
           .drop("__host")
       } else pruned

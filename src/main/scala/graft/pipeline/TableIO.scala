@@ -45,9 +45,6 @@ object TableIO {
         .toSet
   }
 
-  /** Write a bucket's data (no commit yet — the manifest is the commit
-    * point and must come LAST, after any lineage/metrics writes).
-    */
   /** Training-data export sink: gzipped JSONL (one JSON object per line —
     * the standard LLM-corpus interchange format), partitioned like the
     * parquet layout. Spark's native JSON writer keeps this a map-only
@@ -61,6 +58,9 @@ object TableIO {
       .json(path)
   }
 
+  /** Write a bucket's data (no commit yet — the manifest is the commit
+    * point and must come LAST, after any lineage/metrics writes).
+    */
   def writeBucketData(df: DataFrame, table: String, bucket: Long): Unit =
     df.write.mode("overwrite").parquet(s"$table/$BucketCol=$bucket")
 
@@ -256,8 +256,7 @@ object TableIO {
     val spark = docs.sparkSession
     import org.apache.spark.sql.expressions.Window
     val t = docs.select(col("doc_id"),
-      expr(s"cast(size(filter(split($textCol, ' '), x -> x <> '')) as bigint)")
-        .as("n_toks"),
+      size(graft.ops.TextAnalysis.spaceTokens(textCol)).cast("bigint").as("n_toks"),
       expr(s"cast(doc_id as bigint) div $groupSize").as("grp")) // integer div — float division would lose precision past 2^53
     val grpRows = t.groupBy("grp").agg(sum("n_toks").as("grp_toks"))
       .orderBy("grp").collect()

@@ -78,8 +78,7 @@ object ExtractStream {
     import spark.implicits._
     val withHost = parsed.toDF()
       .withWatermark("warc_ts", "10 minutes")
-      .withColumn("host",
-        regexp_extract(col("url"), "^[A-Za-z][A-Za-z0-9+.-]*://([^/]+)", 1))
+      .withColumn("host", graft.ops.UrlOps.hostKey(col("url")))
       .select(col("host"), col("warc_ts"), col("parse_ok"), col("n_bytes"))
       .as[(String, java.sql.Timestamp, Boolean, Int)]
 
@@ -139,8 +138,7 @@ object ExtractStream {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("host").orderBy("warc_ts")
     parsed
-      .withColumn("host",
-        regexp_extract(col("url"), "^[A-Za-z][A-Za-z0-9+.-]*://([^/]+)", 1))
+      .withColumn("host", graft.ops.UrlOps.hostKey(col("url")))
       .select(col("host"), col("warc_ts"), col("parse_ok"), col("n_bytes"))
       .withColumn("prev_ts", lag(col("warc_ts"), 1).over(w))
       .withColumn("new_session",

@@ -118,6 +118,16 @@ class HtmlFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.sql("SELECT html_unescape(1)").collect())
   }
 
+  test("a second register keeps the registered css_count_native, not a new one") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    val before = registry.lookupFunction(FunctionIdentifier("css_count_native"))
+    assert(before.isDefined)
+    GraftExtensions.register(spark)
+    val after = registry.lookupFunction(FunctionIdentifier("css_count_native"))
+    assert(after.exists(_ eq before.get))
+  }
+
   test("mutateDemo between two css_first_text calls does not change the second result") {
     import spark.implicits._
     val html = "<div> <p> hi </p> </div>"

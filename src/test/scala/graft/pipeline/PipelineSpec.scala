@@ -694,6 +694,107 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  // Expected values pinned from the Column-fold implementation these
+  // functions replaced (run, not derived): nulls, empty and fragment-only
+  // refs, absolute and protocol-relative refs, %-runs, non-ASCII, `..`
+  // past the root, ports and upper case.
+  private val resolveTable = Seq[(String, String, String)](
+      (null, "g", null),
+      ("http://a/b/c/d;p?q", null, null),
+      (null, "https://x.example/p#f", "https://x.example/p"),
+      (null, null, null),
+      ("http://a/b/c/d;p?q", "", "http://a/b/c/d;p?q"),
+      ("http://a/b/c/d;p?q", "#frag", "http://a/b/c/d;p?q"),
+      ("http://a/b/c/d;p?q", "HTTPS://X.Example:443/A/../b#f", "HTTPS://X.Example:443/A/../b"),
+      ("HTTPS://a.example/p", "//cdn.example/c/x#f", "https://cdn.example/c/x"),
+      ("http://a/b/c/d", "g%2e%2E/%7e?q=%41%", "http://a/b/c/g%2e%2E/%7e?q=%41%"),
+      ("http://a/b/", "../../../../g", "http://a/g"),
+      ("http://a/b/c/", "./../x/./..", "http://a/b/"),
+      ("http://a:8080/b/c", "d", "http://a:8080/b/d"),
+      ("http://a/b/c", "\u65e5\u672c/\u00e9?\u00fc#x", "http://a/b/\u65e5\u672c/\u00e9?\u00fc"),
+      ("not a url", "g", "/g"),
+      ("not a url", "//h/p", "://h/p"),
+      ("http://a/b/c", "mailto:x@y", "mailto:x@y"),
+      ("http://A.Example", "?y", "http://A.Example/?y"),
+      ("http://a/b/c?q#f", "#", "http://a/b/c?q")
+  )
+  private val documentBaseTable = Seq[(String, String, String)](
+      ("http://h/p.html", null, "http://h/p.html"),
+      ("http://h/p.html", "", "http://h/p.html"),
+      (null, "rel/", null),
+      (null, null, null),
+      (null, "https://b.example/x/", "https://b.example/x/"),
+      ("http://h/dir/p.html", "rel/", "http://h/dir/rel/"),
+      ("http://h/dir/p.html", "https://B.example/x/", "https://B.example/x/"),
+      ("http://h/dir/p.html", "#top", "http://h/dir/p.html"),
+      ("http://h/dir/p.html", "../../../up/", "http://h/up/"),
+      ("http://h/dir/p.html", "//cdn.example/base/", "http://cdn.example/base/")
+  )
+  private val canonicalizeTable = Seq[(String, String)](
+      (null, null),
+      ("", ":///"),
+      ("#frag", ":///"),
+      ("HTTP://Example.COM", "http://example.com/"),
+      ("//host/p", ":///"),
+      ("http://h.example/%7e%41%2f%zz%", "http://h.example/~A%2F%zz%"),
+      ("http://h.example/a/%2E%2E/../../../b", "http://h.example/b"),
+      ("HTTPS://H.example:443/P?Q=%7E#F", "https://h.example/P?Q=~"),
+      ("http://h.example:8080", "http://h.example:8080/"),
+      ("http://h.example:80/", "http://h.example/"),
+      ("https://h.example:80/", "https://h.example:80/"),
+      ("http://\u00dcBER.Example/\u00e9%C3%A9", "http://\u00fcber.example/\u00e9%C3%A9"),
+      ("http://user:Pw@Host.Example:81/x", "http://user/x"),
+      ("ftp://H.Example:21/a/./b/.", "ftp://h.example:21/a/b/"),
+      ("relative/path?x", ":///?x"),
+      ("http://h.example/a//../b/%2e/", "http://h.example/a/b/"),
+      ("HTTP://\u0130STANBUL.example/", "http://i\u0307stanbul.example/"),
+      ("http://h.example/?a=%7e%7E%2F%2f", "http://h.example/?a=~~%2F%2F")
+  )
+
+  test("url table: resolveUrl, documentBase, canonicalizeUrl as Columns and as Strings") {
+    import spark.implicits._
+    import graft.ops.UrlOps
+    val r = resolveTable.map(t => (t._1, t._2)).toDF("b", "r")
+      .select(UrlOps.resolveUrl(col("b"), col("r"))).as[String].collect().toSeq
+    val d = documentBaseTable.map(t => (t._1, t._2)).toDF("p", "h")
+      .select(UrlOps.documentBase(col("p"), col("h"))).as[String].collect().toSeq
+    val c = canonicalizeTable.map(_._1).toDF("u")
+      .select(UrlOps.canonicalizeUrl(col("u"))).as[String].collect().toSeq
+    resolveTable.zip(r).foreach { case ((b, f, want), got) =>
+      assert(got == want, s"resolveUrl($b, $f) as Column")
+      assert(UrlOps.resolveUrl(b, f) == want, s"resolveUrl($b, $f)")
+    }
+    documentBaseTable.zip(d).foreach { case ((pg, h, want), got) =>
+      assert(got == want, s"documentBase($pg, $h) as Column")
+      assert(UrlOps.documentBase(pg, h) == want, s"documentBase($pg, $h)")
+    }
+    canonicalizeTable.zip(c).foreach { case ((u, want), got) =>
+      assert(got == want, s"canonicalizeUrl($u) as Column")
+      assert(UrlOps.canonicalizeUrl(u) == want, s"canonicalizeUrl($u)")
+    }
+  }
+
+  test("url composition nested in one select equals the staged result") {
+    import spark.implicits._
+    import graft.ops.UrlOps
+    val rows = for {
+      (pg, h, _) <- documentBaseTable
+      (_, ref, _) <- resolveTable
+    } yield (pg, h, ref)
+    val df = rows.toDF("page", "bhref", "ref")
+    val nested = df.select(UrlOps.canonicalizeUrl(UrlOps.resolveUrl(
+      UrlOps.documentBase(col("page"), col("bhref")), col("ref"))))
+      .as[String].collect().toSeq
+    val base = df.select(UrlOps.documentBase(col("page"), col("bhref")).as("eb"), col("ref"))
+      .as[(String, String)].collect().toSeq.toDF("eb", "ref")
+    val resolved = base.select(UrlOps.resolveUrl(col("eb"), col("ref")))
+      .as[String].collect().toSeq.toDF("rs")
+    val staged = resolved.select(UrlOps.canonicalizeUrl(col("rs"))).as[String].collect().toSeq
+    assert(nested == staged)
+    assert(nested == rows.map { case (pg, h, ref) =>
+      UrlOps.canonicalizeUrl(UrlOps.resolveUrl(UrlOps.documentBase(pg, h), ref)) })
+  }
+
   test("decontamination flags docs sharing a benchmark passage, not clean docs") {
     import spark.implicits._
     val passage = "the exact benchmark question text appears verbatim in this document"

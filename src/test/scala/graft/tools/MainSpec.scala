@@ -52,7 +52,7 @@ class MainSpec extends AnyFunSuite {
       }
       val (status, out, _) = runMain("adversarial", dir.toString)
       assert(status == 0, out)
-      val extractors = 16
+      val extractors = 18
       assert(out.contains(
         s"[sweep] ${pages.length} docs, ${extractors * pages.length} extractor calls, 0 throws"),
         out)
