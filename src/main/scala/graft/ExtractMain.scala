@@ -1,20 +1,25 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline.{Synth, ExtractJob, TableIO}
 
 /** The resumable extraction job (north_rule): bucketed pages → per-bucket
-  * kernel extraction → bucket-committed output table with manifest lineage.
-  * Re-running after a kill resumes from the last committed bucket with no
-  * duplicate output (TableIO manifests are atomic).
+  * kernel extraction → bucket-committed output table whose manifests hold
+  * each bucket's lineage. Re-running after a kill resumes from the last
+  * committed bucket with no duplicate output (TableIO manifests are atomic).
   *
   *   runMain graft.ExtractMain <sfDir> <outTable> [nBuckets] [saltParts] [failAtBucket]
   *
   * `failAtBucket` injects a crash before committing that bucket — used to
-  * drive the resume path end-to-end.
+  * drive the resume path end-to-end; the process then exits with status 17.
   */
 object ExtractMain {
+
+  /** The crash [[runBuckets]] injects before writing bucket `bucket`. */
+  final class InjectedFailure(val bucket: Long)
+    extends RuntimeException(s"injected failure before bucket $bucket")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outTable = args(1)
@@ -23,15 +28,28 @@ object ExtractMain {
     val failAtBucket = if (args.length > 4) args(4).toInt else -1
     val spark = tools.Main.localSession()
     val pages = Synth.pages(spark, sfDir)
-    runBuckets(spark, pages, outTable, nBuckets, saltParts, failAtBucket)
+    val status = exitStatus(runBuckets(spark, pages, outTable, nBuckets, saltParts, failAtBucket))
     spark.stop()
+    if (status != 0) sys.exit(status)
   }
+
+  /** 0 when `run` returns, 17 when it throws an [[InjectedFailure]]. */
+  def exitStatus(run: => Unit): Int =
+    try { run; 0 }
+    catch {
+      case e: InjectedFailure =>
+        println(s"[extract] ${e.getMessage}")
+        17
+    }
 
   /** The bucketed-commit loop shared by [[ExtractMain]] and [[SoakMain]]
     * (`graft.tools.Main soak`): pending-bucket discovery (resume-aware),
-    * per-bucket extraction + atomic commit + lineage metrics + snapshot append, then
-    * the end-of-run totals. `failAtBucket` injects a crash BEFORE that
-    * bucket's commit to drive the resume path.
+    * then per bucket one write job that also counts the bucket's lineage
+    * (an `Observation` of [[ExtractJob.metricAggs]]) and one
+    * [[TableIO.commitBucket]] that keeps it in the manifest. The end-of-run
+    * totals are summed from the manifests, so nothing written is read back.
+    * `failAtBucket` throws an [[InjectedFailure]] BEFORE that bucket's write
+    * to drive the resume path.
     */
   def runBuckets(spark: SparkSession, pages: org.apache.spark.sql.DataFrame,
       outTable: String, nBuckets: Int, saltParts: Int,
@@ -49,41 +67,26 @@ object ExtractMain {
       .collect().map(_.getLong(0)).sorted
 
     pendingBuckets.foreach { bucket =>
-      if (bucket == failAtBucket) {
-        println(s"[extract] injected failure before bucket $bucket")
-        spark.stop()
-        sys.exit(17)
-      }
+      if (bucket == failAtBucket) throw new InjectedFailure(bucket)
       val t0 = System.nanoTime()
       val slice = pending.filter(col(TableIO.BucketCol) === bucket)
         .drop(TableIO.BucketCol)
-      val parsed = ExtractJob.run(slice, saltPartitions = saltParts).toDF()
-      TableIO.writeBucketData(parsed, outTable, bucket)
+      val counts = Observation()
+      TableIO.writeBucketData(
+        ExtractJob.run(slice, saltPartitions = saltParts).toDF()
+          .observe(counts, ExtractJob.metricAggs.head, ExtractJob.metricAggs.tail: _*),
+        outTable, bucket)
       val wall = (System.nanoTime() - t0) / 1e9
-      // ONE read of the written parquet serves both the lineage metrics and
-      // the manifest row count (no recompute of the parse); the metrics row
-      // lands BEFORE the manifest so a crash between the two can only lose
-      // an uncommitted bucket, never a committed bucket's lineage
-      val written = spark.read.parquet(s"$outTable/${TableIO.BucketCol}=$bucket")
-      val m = written.agg(ExtractJob.metricAggs.head, ExtractJob.metricAggs.tail: _*)
-        .collect().head
-      TableIO.writeBucketMetrics(spark, outTable, TableIO.BucketMetrics(
-        bucket, m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3),
-        wall, m.getLong(0) / math.max(wall, 1e-9),
-        attempt = TableIO.nextAttempt(spark, outTable, bucket)))
-      TableIO.commitManifest(outTable, bucket, m.getLong(0))
-      TableIO.appendSnapshot(outTable, bucket)
-      println(f"[extract] committed bucket $bucket: ${m.getLong(0)} docs in $wall%.2f s")
+      val n = counts.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
+      TableIO.commitBucket(outTable, bucket, n("docs"), Some(TableIO.Lineage(
+        n("docs"), n("parse_ok_docs"), n("bytes_in"), n("chars_out"), wall)))
+      println(f"[extract] committed bucket $bucket: ${n("docs")} docs in $wall%.2f s")
     }
 
-    val out = spark.read.parquet(outTable)
-    val m = out.agg(count(lit(1)), sum(when(col("parse_ok"), 1L).otherwise(0L)),
-      sum("n_bytes")).collect().head
-    println(s"""[extract] done: docs=${m.getLong(0)} parse_ok=${m.getLong(1)} bytes_in=${m.getLong(2)} buckets=${TableIO.committedBuckets(outTable).size}""")
-    val mt = TableIO.metricsTable(spark, outTable)
-    if (!mt.isEmpty) {
-      val tot = mt.agg(sum("docs"), sum("wall_sec")).collect().head
-      println(f"[extract] metrics table: ${mt.count()} bucket rows, ${tot.getLong(0)} docs, ${tot.getDouble(1)}%.2f wall-sec")
-    }
+    val lineage = TableIO.bucketLineage(outTable).map(_._2)
+    println(s"[extract] done: buckets=${TableIO.committedBuckets(outTable).size} " +
+      s"docs=${lineage.map(_.docs).sum} parse_ok=${lineage.map(_.parse_ok_docs).sum} " +
+      s"bytes_in=${lineage.map(_.bytes_in).sum} chars_out=${lineage.map(_.chars_out).sum} " +
+      f"wall_sec=${lineage.map(_.wall_sec).sum}%.2f")
   }
 }

@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
 /** Whole-suite physical-plan audit AND regression gate: flags
-  * cartesian/nested-loop joins, counts exchanges + non-codegen UDF operators
+  * cartesian/nested-loop joins, counts exchanges + ScalaUDF expressions
   * per query, and FAILS (nonzero status) when any query's final plan exceeds
   * the exchange budget or plans a non-whitelisted nested-loop join — so
   * lineage growth (the round-2 q38 defect: 4,088 Exchange nodes from an
@@ -14,7 +18,7 @@ package graft
   * BroadcastNestedLoop by construction (linear in the corpus, the correct
   * shape for an exact-scan baseline; the scale path is q18/q28's LSH).
   */
-object PlanSweep {
+object PlanSweep extends AdaptiveSparkPlanHelper {
 
   /** Max Exchange operators allowed in any query's FINAL physical plan.
     * Every current query plans ≤ 8; the iterative clustering queries (q38,
@@ -27,17 +31,27 @@ object PlanSweep {
   /** Queries whose nested-loop join is deliberate (documented above). */
   val BnljWhitelist: Set[String] = Set("q17_embed_topk")
 
+  /** ScalaUDF nodes in the expression trees of `plan`, its adaptive query
+    * stages and its subqueries. A Scala UDF prints under its name or as
+    * `UDF(...)`, so the plan string cannot count them.
+    */
+  def scalaUdfs(plan: SparkPlan): Int =
+    collectWithSubqueries(plan) { case p =>
+      p.expressions.map(_.collect { case u: ScalaUDF => u }.size).sum
+    }.sum
+
   def run(args: Array[String]): Int = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val spark = tools.Main.localSession()
     val bad = Seq("CartesianProduct", "BroadcastNestedLoop")
     var violations = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
+      val executed = fn(spark, sfDir).queryExecution.executedPlan
+      val plan = executed.toString
       val hits = bad.filter(plan.contains)
         .filterNot(_ => BnljWhitelist.contains(name))
       val exchanges = "Exchange".r.findAllIn(plan).length
-      val udfs = "BatchEvalPython|ScalaUDF".r.findAllIn(plan).length
+      val udfs = scalaUdfs(executed)
       val overBudget = exchanges > ExchangeBudget
       if (hits.nonEmpty || overBudget) violations += 1
       println(s"$name: exchanges=$exchanges udf=$udfs" +

@@ -7,8 +7,9 @@ import graft.pipeline.Synth
   * behind BENCH.md's scale section: the sf corpus is replicated R times
   * with DISJOINT doc_id ranges (each replica offset by 10^7, so urls and
   * ids never collide), synthesized into pages, and pushed through the
-  * exact [[ExtractMain.runBuckets]] loop — per-bucket commit, lineage
-  * metrics, snapshot log, resume after an injected kill. Reports totals
+  * exact [[ExtractMain.runBuckets]] loop — per-bucket commit with its
+  * lineage in the manifest, snapshot log, resume after an injected kill
+  * (that run exits with status 17). Reports totals
   * plus JVM peak heap so wall-time linearity and memory stability are
   * recorded numbers, not claims.
   *
@@ -37,8 +38,8 @@ object SoakMain {
     val pages = Synth.pagesFromDocs(docs)
 
     val t0 = System.nanoTime()
-    ExtractMain.runBuckets(spark, pages, outTable, nBuckets,
-      saltParts = 0, failAtBucket = failAtBucket)
+    val status = ExtractMain.exitStatus(ExtractMain.runBuckets(spark, pages, outTable,
+      nBuckets, saltParts = 0, failAtBucket = failAtBucket))
     val wall = (System.nanoTime() - t0) / 1e9
 
     import scala.jdk.CollectionConverters._
@@ -48,6 +49,6 @@ object SoakMain {
       .map(_.getPeakUsage.getUsed).sum
     println(f"[soak] replication=$rep wall=$wall%.1f s peak_heap=${peakHeap / 1e9}%.2f GB")
     spark.stop()
-    0
+    status
   }
 }

@@ -52,6 +52,7 @@ object UrlOps {
   def urlHost(u: Column): Column = lower(regexp_extract(u, Host.pattern, 1))
 
   def urlPath(u: Column): Column = regexp_extract(u, Path.pattern, 1)
+  def urlPath(u: String): String = extract(Path, u)
 
   /** The partition key for per-host work (`ExtractJob.run`'s salted
     * repartition, host sessions): everything between `scheme://` and the

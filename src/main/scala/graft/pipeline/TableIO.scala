@@ -8,7 +8,9 @@ import scala.jdk.CollectionConverters._
 /** Iceberg-style table seam (SURVEY.md §7.6). No Iceberg runtime jar exists
   * in this sandbox, so the rule's Iceberg features are emulated: a
   * bucket-partitioned parquet layout plus a `_manifests/` JSON commit log
-  * giving snapshot-style atomic bucket commits, resumability, and lineage.
+  * giving snapshot-style atomic bucket commits, resumability, and lineage:
+  * each bucket's manifest holds its row count and, for extraction output,
+  * the lineage counted while the bucket was written ([[commitBucket]]).
   * On a real cluster the read/write call sites swap to `format("iceberg")`.
   */
 object TableIO {
@@ -58,34 +60,72 @@ object TableIO {
       .json(path)
   }
 
-  /** Write a bucket's data (no commit yet — the manifest is the commit
-    * point and must come LAST, after any lineage/metrics writes).
+  /** Write a bucket's data. It is not committed until [[commitBucket]]
+    * drops its manifest.
     */
   def writeBucketData(df: DataFrame, table: String, bucket: Long): Unit =
     df.write.mode("overwrite").parquet(s"$table/$BucketCol=$bucket")
 
-  /** Atomically commit a bucket by dropping its manifest. */
-  def commitManifest(table: String, bucket: Long, rows: Long): Unit = {
-    val dir = manifestDir(table)
+  /** A bucket's lineage, counted while its data was written and kept in
+    * its manifest.
+    */
+  final case class Lineage(
+      docs: Long,
+      parse_ok_docs: Long,
+      bytes_in: Long,
+      chars_out: Long,
+      wall_sec: Double)
+
+  /** The one bucket commit, after the bucket's data is fully written: one
+    * atomic manifest holding `rows` and the lineage, then a snapshot. The
+    * manifest is the commit point, so a crash before it leaves the bucket
+    * pending and a re-run overwrites its data: no duplicate output. A crash
+    * between the manifest and the snapshot is repaired by
+    * [[reconcileSnapshots]].
+    */
+  def commitBucket(table: String, bucket: Long, rows: Long,
+      lineage: Option[Lineage] = None): Unit = {
+    val fields = lineage.fold("") { l =>
+      s""","docs":${l.docs},"parse_ok_docs":${l.parse_ok_docs},"bytes_in":${l.bytes_in},""" +
+        s""""chars_out":${l.chars_out},"wall_sec":${l.wall_sec}"""
+    }
+    writeAtomically(manifestDir(table), s"bucket-$bucket.json",
+      s"""{"bucket":$bucket,"rows":$rows,"schema":"parsed_doc_v1"$fields}""")
+    appendSnapshot(table, bucket)
+  }
+
+  private def writeAtomically(dir: Path, name: String, body: String): Unit = {
     Files.createDirectories(dir)
-    val tmp = dir.resolve(s".bucket-$bucket.json.tmp")
-    val fin = dir.resolve(s"bucket-$bucket.json")
-    Files.writeString(tmp, s"""{"bucket":$bucket,"rows":$rows,"schema":"parsed_doc_v1"}""")
-    Files.move(tmp, fin,
+    val tmp = dir.resolve(s".$name.tmp")
+    Files.writeString(tmp, body)
+    Files.move(tmp, dir.resolve(name),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Idempotent bucket write + commit. A re-run after a crash rewrites any
-    * uncommitted bucket (overwrite) and skips committed ones — no duplicate
-    * output. The manifest row count comes from one read of the written
-    * parquet (footer metadata), not a recompute of `df`.
+  /** Each committed bucket's lineage, read from the manifests in bucket
+    * order. A bucket committed without lineage is left out.
     */
-  def writeBucket(df: DataFrame, table: String, bucket: Long): Unit = {
-    writeBucketData(df, table, bucket)
-    val rows = df.sparkSession.read.parquet(s"$table/$BucketCol=$bucket").count()
-    commitManifest(table, bucket, rows)
-    appendSnapshot(table, bucket)
+  def bucketLineage(table: String): Seq[(Long, Lineage)] =
+    committedBuckets(table).toSeq.sorted.flatMap { b =>
+      val body = Files.readString(manifestDir(table).resolve(s"bucket-$b.json"))
+      val f = "\"([a-z_]+)\":([-0-9.E]+)".r.findAllMatchIn(body)
+        .map(m => m.group(1) -> m.group(2)).toMap
+      if (!f.contains("docs")) None
+      else Some(b -> Lineage(f("docs").toLong, f("parse_ok_docs").toLong,
+        f("bytes_in").toLong, f("chars_out").toLong, f("wall_sec").toDouble))
+    }
+
+  /** The lineage of every committed bucket as a table, one row a bucket. It
+    * is built from the manifests on the driver and reads no data.
+    */
+  def metricsTable(spark: SparkSession, table: String): DataFrame = {
+    import spark.implicits._
+    bucketLineage(table).map { case (b, l) =>
+      (b, l.docs, l.parse_ok_docs, l.bytes_in, l.chars_out, l.wall_sec,
+        l.docs / math.max(l.wall_sec, 1e-9))
+    }.toDF("bucket", "docs", "parse_ok_docs", "bytes_in", "chars_out", "wall_sec",
+      "docs_per_sec")
   }
 
   // ---- snapshot log (Iceberg-style time travel over the commit log) ----
@@ -102,24 +142,17 @@ object TableIO {
     * the single writing driver (one job owns a table run; Iceberg's
     * optimistic-retry protocol is out of scope here).
     */
-  def appendSnapshot(table: String, bucket: Long): Long = {
-    val dir = snapshotDir(table)
-    Files.createDirectories(dir)
+  private def appendSnapshot(table: String, bucket: Long): Long = {
     val id = snapshots(table).lastOption.map(_._1).getOrElse(0L) + 1L
     val buckets = committedBuckets(table).toSeq.sorted
-    val tmp = dir.resolve(s".snap-$id.json.tmp")
-    val fin = dir.resolve(f"snap-$id%06d.json")
-    Files.writeString(tmp,
+    writeAtomically(snapshotDir(table), f"snap-$id%06d.json",
       s"""{"snapshot_id":$id,"committed_bucket":$bucket,""" +
         s""""buckets":[${buckets.mkString(",")}]}""")
-    Files.move(tmp, fin,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     id
   }
 
-  /** Catch-up snapshot (crash-window repair): a crash BETWEEN
-    * [[commitManifest]] and [[appendSnapshot]] leaves a committed bucket
+  /** Catch-up snapshot (crash-window repair): a crash BETWEEN the
+    * manifest and the snapshot of [[commitBucket]] leaves a committed bucket
     * with no snapshot entry; if it was the final bucket, the latest
     * snapshot would permanently under-report the table vs the manifest
     * view. Called on job start: if the manifest bucket set differs from
@@ -288,72 +321,4 @@ object TableIO {
     */
   def resumeByUrl(pages: DataFrame, committedUrls: DataFrame): DataFrame =
     pages.join(committedUrls.select("url"), Seq("url"), "left_anti")
-
-  /** Per-bucket lineage + throughput metrics row, checkpointed alongside the
-    * data (north_star: "per-partition lineage + parse-error/throughput
-    * metrics checkpointed to a metrics table so any run is resumable").
-    */
-  final case class BucketMetrics(
-      bucket: Long,
-      docs: Long,
-      parse_ok_docs: Long,
-      bytes_in: Long,
-      chars_out: Long,
-      wall_sec: Double,
-      docs_per_sec: Double,
-      attempt: Int)
-
-  /** Append a metrics row for a committed bucket under `_metrics/` (each
-    * bucket's metrics live in their own subdir so re-runs overwrite rather
-    * than duplicate — idempotent like the data itself).
-    */
-  def writeBucketMetrics(spark: SparkSession, table: String, m: BucketMetrics): Unit = {
-    import spark.implicits._
-    Seq(m).toDS().toDF()
-      .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"$table/_metrics/bucket=${m.bucket}")
-  }
-
-  /** The metrics table across all buckets that have a complete metrics file
-    * (empty schema-correct frame when none exist yet; a bucket dir holding
-    * only a crashed write's `_temporary/` leftovers is skipped rather than
-    * failing schema inference).
-    */
-  def metricsTable(spark: SparkSession, table: String): DataFrame = {
-    import spark.implicits._
-    val dir = Paths.get(table, "_metrics")
-    val bucketDirs =
-      if (!Files.isDirectory(dir)) Seq.empty[String]
-      else
-        listDir(dir)
-          .filter(p => p.getFileName.toString.startsWith("bucket="))
-          .filter(p => Files.isDirectory(p) &&
-            listDir(p).exists(_.getFileName.toString.endsWith(".parquet")))
-          .map(_.toString)
-    if (bucketDirs.isEmpty) spark.emptyDataset[BucketMetrics].toDF()
-    else spark.read.parquet(bucketDirs: _*) // bucket is a data column
-  }
-
-  /** Attempt number for the next metrics row of `bucket` (1 + the highest
-    * previously recorded attempt — counts retries across crashes).
-    */
-  def nextAttempt(spark: SparkSession, table: String, bucket: Long): Int = {
-    val d = Paths.get(table, "_metrics", s"bucket=$bucket")
-    val hasData = Files.isDirectory(d) &&
-      listDir(d).exists(_.getFileName.toString.endsWith(".parquet"))
-    if (!hasData) 1
-    else
-      try {
-        val row = spark.read.parquet(d.toString).agg(max("attempt")).collect().head
-        if (row.isNullAt(0)) 1 else row.getInt(0) + 1
-      } catch {
-        case e: Throwable =>
-          // a partial/corrupt prior metrics file must not silently reset the
-          // retry counter to 1 — log and mark the attempt as unknown-retry
-          System.err.println(
-            s"[tableio] WARN: unreadable metrics for bucket=$bucket (${e.getMessage}); recording attempt=2")
-          2
-      }
-  }
 }

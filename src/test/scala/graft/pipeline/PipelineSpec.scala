@@ -32,6 +32,26 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.toDF()
   }
 
+  /** Writes and commits bucket `b` of `bucketed`, as a job would. */
+  private def commitSlice(bucketed: DataFrame, dir: String, b: Long): Unit = {
+    val slice = bucketed.filter(col(TableIO.BucketCol) === b)
+    TableIO.writeBucketData(slice, dir, b)
+    TableIO.commitBucket(dir, b, slice.count())
+  }
+
+  /** `n` pages one hour apart, so page i lands in bucket i % nBuckets; every
+    * third page leaves a tag open.
+    */
+  private def hourlyPages(n: Int): DataFrame = {
+    import spark.implicits._
+    (0 until n).map { i =>
+      (i.toLong, s"https://h${i % 3}.example/p$i",
+        java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(i * 3600L)),
+        (if (i % 3 == 0) s"<div><p>page $i" else s"<div><p>page $i</p></div>")
+          .getBytes("UTF-8"), "en")
+    }.toDF("doc_id", "url", "warc_ts", "html", "lang")
+  }
+
   test("flagship fixture is byte-identical through the Dataset pipeline") {
     val parsed = ExtractJob.run(pagesOf("<span>o<p>a</p><p>b</p>c</span>")).collect()
     assert(parsed.length == 1)
@@ -66,16 +86,14 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nBuckets = 4
     val bucketed = TableIO.withBucket(df, nBuckets)
     // commit buckets 0 and 1
-    Seq(0L, 1L).foreach { b =>
-      TableIO.writeBucket(bucketed.filter(col(TableIO.BucketCol) === b), dir, b)
-    }
+    Seq(0L, 1L).foreach(commitSlice(bucketed, dir, _))
     assert(TableIO.committedBuckets(dir) == Set(0L, 1L))
     val pending = TableIO.pendingOnly(df, dir, nBuckets)
     val pendingBuckets = pending.select(TableIO.BucketCol).distinct()
       .collect().map(_.getLong(0)).toSet
     assert(pendingBuckets == Set(2L, 3L))
     // idempotent re-commit: same rows, no duplicates
-    TableIO.writeBucket(bucketed.filter(col(TableIO.BucketCol) === 1L), dir, 1L)
+    commitSlice(bucketed, dir, 1L)
     val rows = spark.read.parquet(s"$dir/${TableIO.BucketCol}=1").count()
     assert(rows == bucketed.filter(col(TableIO.BucketCol) === 1L).count())
   }
@@ -87,9 +105,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       (s"u$i", java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(i * 3600L)), i)
     }.toDF("url", "warc_ts", "v")
     val bucketed = TableIO.withBucket(df, 4)
-    Seq(0L, 1L, 2L).foreach { b =>
-      TableIO.writeBucket(bucketed.filter(col(TableIO.BucketCol) === b), dir, b)
-    }
+    Seq(0L, 1L, 2L).foreach(commitSlice(bucketed, dir, _))
     val log = TableIO.snapshots(dir)
     assert(log.map(_._1) == Seq(1L, 2L, 3L)) // one snapshot per commit
     assert(log.last._2 == Set(0L, 1L, 2L)) // full committed set recorded
@@ -102,7 +118,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       bucketed.filter(col(TableIO.BucketCol) < 3L).count())
     assert(TableIO.readSnapshot(spark, dir, 0L).isEmpty)
     // a re-commit appends a NEW snapshot (Iceberg-style append-only log)
-    TableIO.writeBucket(bucketed.filter(col(TableIO.BucketCol) === 1L), dir, 1L)
+    commitSlice(bucketed, dir, 1L)
     assert(TableIO.snapshots(dir).map(_._1).last == 4L)
     assert(TableIO.readSnapshot(spark, dir, 3L).count() == asOf1.count() +
       bucketed.filter(col(TableIO.BucketCol).isin(1L, 2L)).count())
@@ -115,12 +131,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       (s"u$i", java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(i * 3600L)), i)
     }.toDF("url", "warc_ts", "v")
     val bucketed = TableIO.withBucket(df, 4)
-    TableIO.writeBucket(bucketed.filter(col(TableIO.BucketCol) === 0L), dir, 0L)
+    commitSlice(bucketed, dir, 0L)
     // crash window: bucket 1's data + manifest land but the process dies
-    // before appendSnapshot — the latest snapshot under-reports the table
-    TableIO.writeBucketData(
-      bucketed.filter(col(TableIO.BucketCol) === 1L), dir, 1L)
-    TableIO.commitManifest(dir, 1L, 5L)
+    // before its snapshot — the latest snapshot under-reports the table
+    commitSlice(bucketed, dir, 1L)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "_snapshots", "snap-000002.json"))
     assert(TableIO.committedBuckets(dir) == Set(0L, 1L))
     assert(TableIO.snapshots(dir).last._2 == Set(0L))
     // reconcile appends exactly one catch-up snapshot with the true set
@@ -213,19 +228,82 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bucket metrics table is checkpointed and idempotent") {
+    // the lineage lives in each bucket's manifest; the table reads it back
     val dir = java.nio.file.Files.createTempDirectory("graft_metrics").toString
-    TableIO.writeBucketMetrics(spark, dir,
-      TableIO.BucketMetrics(3L, 100L, 90L, 5000L, 4000L, 1.5, 66.7, 1))
-    TableIO.writeBucketMetrics(spark, dir,
-      TableIO.BucketMetrics(4L, 50L, 50L, 2000L, 1500L, 0.5, 100.0, 1))
-    // re-write of the same bucket overwrites (no duplicate lineage rows)
-    TableIO.writeBucketMetrics(spark, dir,
-      TableIO.BucketMetrics(3L, 100L, 90L, 5000L, 4000L, 1.2, 83.3, 2))
+    TableIO.commitBucket(dir, 3L, 100L, Some(TableIO.Lineage(100L, 90L, 5000L, 4000L, 1.5)))
+    TableIO.commitBucket(dir, 4L, 50L, Some(TableIO.Lineage(50L, 50L, 2000L, 1500L, 0.5)))
+    // re-commit of the same bucket overwrites (no duplicate lineage rows)
+    TableIO.commitBucket(dir, 3L, 100L, Some(TableIO.Lineage(100L, 90L, 5000L, 4000L, 1.25)))
+    // a bucket committed without lineage has no metrics row
+    TableIO.commitBucket(dir, 5L, 7L)
+    val manifest = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(dir, "_manifests", "bucket-3.json"))
+    assert("\"rows\":([0-9]+)".r.findFirstMatchIn(manifest).map(_.group(1)).contains("100"))
+    assert(TableIO.bucketLineage(dir) == Seq(
+      3L -> TableIO.Lineage(100L, 90L, 5000L, 4000L, 1.25),
+      4L -> TableIO.Lineage(50L, 50L, 2000L, 1500L, 0.5)))
     val mt = TableIO.metricsTable(spark, dir)
     assert(mt.count() == 2)
     val row3 = mt.filter(col("bucket") === 3L).collect().head
-    assert(row3.getAs[Int]("attempt") == 2)
+    assert(row3.getAs[Double]("wall_sec") == 1.25)
+    assert(row3.getAs[Double]("docs_per_sec") == 80.0)
     assert(TableIO.metricsTable(spark, "/nonexistent_graft_table").isEmpty)
+  }
+
+  test("runBuckets: a crash before bucket 1 resumes to every row once, lineage in the manifests") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_resume").toString
+    val pages = hourlyPages(30)
+    val crash = intercept[graft.ExtractMain.InjectedFailure] {
+      graft.ExtractMain.runBuckets(spark, pages, dir, 3, saltParts = 0, failAtBucket = 1)
+    }
+    assert(crash.bucket == 1L)
+    assert(TableIO.committedBuckets(dir) == Set(0L))
+    assert(TableIO.snapshots(dir) == Seq(1L -> Set(0L)))
+
+    graft.ExtractMain.runBuckets(spark, pages, dir, 3, saltParts = 0, failAtBucket = -1)
+    assert(TableIO.committedBuckets(dir) == Set(0L, 1L, 2L))
+    assert(TableIO.snapshots(dir) ==
+      Seq(1L -> Set(0L), 2L -> Set(0L, 1L), 3L -> Set(0L, 1L, 2L)))
+    val urls = spark.read.parquet(dir).select("url").collect().map(_.getString(0)).sorted
+    assert(urls.toSeq == pages.select("url").collect().map(_.getString(0)).sorted.toSeq)
+
+    val lineage = TableIO.bucketLineage(dir)
+    assert(lineage.map(_._1) == Seq(0L, 1L, 2L))
+    lineage.foreach { case (b, l) =>
+      val r = spark.read.parquet(s"$dir/${TableIO.BucketCol}=$b")
+        .agg(ExtractJob.metricAggs.head, ExtractJob.metricAggs.tail: _*).collect().head
+      assert((l.docs, l.parse_ok_docs, l.bytes_in, l.chars_out) ==
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)), s"bucket $b")
+      assert(l.wall_sec > 0)
+    }
+    assert(lineage.map(_._2.parse_ok_docs).sum < urls.length)
+  }
+
+  test("runBuckets reads nothing back: 2 buckets take 4 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = java.nio.file.Files.createTempDirectory("graft_jobs").toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.job.description") == "drain") drained.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      graft.ExtractMain.runBuckets(spark, hourlyPages(8), dir, 2, saltParts = 0, failAtBucket = -1)
+      // listener events arrive in order, so once this job's start is seen
+      // every job runBuckets started has been counted
+      sc.setJobDescription("drain")
+      sc.parallelize(Seq(1)).count()
+      sc.setJobDescription(null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(TableIO.committedBuckets(dir) == Set(0L, 1L))
+      // finding the pending buckets is a shuffle (an adaptive map-stage job
+      // and its result job); then each bucket is one write job
+      assert(jobs.get == 4)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("resumeByUrl anti-join removes committed urls") {
@@ -772,6 +850,19 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(got == want, s"canonicalizeUrl($u) as Column")
       assert(UrlOps.canonicalizeUrl(u) == want, s"canonicalizeUrl($u)")
     }
+  }
+
+  test("PlanSweep counts the ScalaUDF nodes of a plan, nested and filtered ones too") {
+    import graft.ops.UrlOps
+    val urls = spark.range(4).select(concat(lit("HTTP://H.example/a/../p"), col("id")).as("u"))
+    def udfs(df: DataFrame) = graft.PlanSweep.scalaUdfs(df.queryExecution.executedPlan)
+    assert(udfs(urls.select(UrlOps.urlHost(col("u")))) == 0)
+    assert(udfs(urls.select(UrlOps.canonicalizeUrl(col("u")))) == 1)
+    assert(udfs(urls.select(UrlOps.canonicalizeUrl(UrlOps.resolveUrl(col("u"), lit("q"))))) == 2)
+    // a filter on the projected column is pushed below the projection, so
+    // the plan evaluates the udf in both
+    val canon = urls.select(UrlOps.canonicalizeUrl(col("u")).as("c"))
+    assert(udfs(canon.filter(col("c").endsWith("p1"))) == 2)
   }
 
   test("url composition nested in one select equals the staged result") {
